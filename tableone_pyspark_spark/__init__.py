@@ -13,10 +13,11 @@ Public API:
         in O(1) passes over the data instead of O(16·V).
 
 Design (vs. reference):
-  * Sufficient statistics only: the engine runs 2-3 single-pass
-    aggregation jobs (strat counts; one ``rollup`` over every continuous
-    variable; one melted count over every categorical variable) and
-    collects k·V scalars — never raw rows (reference pulls full columns
+  * Sufficient statistics only: the engine runs a fixed set of
+    single-pass aggregation scans (one ``rollup`` over every continuous
+    variable that also yields the strat counts; one melted count over
+    every categorical variable; data-mode quartiles) and collects k·V
+    scalars — never raw rows (reference pulls full columns
     via toPandas at :453/:500 and scans the input 16× per continuous
     variable at :325-437).
   * Hypothesis tests (t / ANOVA / chi-square) are computed from those

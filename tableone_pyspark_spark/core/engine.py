@@ -16,16 +16,18 @@ where the ``Index`` double encodes row order (total=0; continuous stats
 one anchor row per variable (reference :193,:210,:483,:522).
 
 Execution model (the Spark-first rewrite): ``collect_sufficient`` runs
-two phases of concurrent bounded single-pass jobs (≤6 total, critical
-path 2: counts ∥ moments ∥ categorical melt ∥ cardinality probe, then
-quartiles split by cardinality — exact disc for low-cardinality vars ∥
-capped sketch for near-unique ones) and ships only O(V·k) aggregated
-scalars to the driver; the output table itself (a few hundred rows at
-most) is then assembled locally and returned as a DataFrame. At 100 TB
-the heavy lifting is exactly those bounded shuffles — nothing else
-scales with data size. Contrast: the reference scans the input ~16×
-per continuous variable (:325-437) and pulls whole columns to the
-driver for p-values (:453, :500).
+one phase-1 rollup over every continuous variable (counts, moments,
+the cardinality probe) concurrently with one categorical melt, then,
+in data mode, the quartile phase split by cardinality (exact disc for
+low-cardinality vars ∥ capped sketch for near-unique ones): at most
+five input scans on a critical path of two. Only O(V·k) aggregated
+scalars reach the driver; the output table itself (a few hundred rows
+at most) is assembled locally and returned as a local relation (an
+Arrow table that plans as ``LocalTableScan``, so collecting it runs no
+Spark job). At 100 TB the heavy lifting is exactly those bounded
+shuffles — nothing else scales with data size. Contrast: the reference
+scans the input ~16× per continuous variable (:325-437) and pulls
+whole columns to the driver for p-values (:453, :500).
 """
 
 from __future__ import annotations
@@ -34,8 +36,10 @@ import math
 import warnings
 from dataclasses import dataclass
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from tableone_pyspark_spark.core.hypothesis import (
     GroupMoments,
@@ -292,11 +296,12 @@ def _assemble(
             )
 
     schema = _schema(count_cols, count_type, p_values)
-    out = spark.createDataFrame([_tuple(r, schema) for r in rows], schema)
-
     if beautify:
-        out = _beautify(spark, rows, schema)
-    return out
+        rows, schema = _beautify(rows, schema)
+    # an Arrow table plans as a LocalTableScan: collecting the result
+    # runs no Spark job
+    table = pa.Table.from_pylist(rows, schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)
 
 
 def _field_names(count_cols: list[str], p_values: bool) -> list[str]:
@@ -326,10 +331,6 @@ def _schema(count_cols: list[str], count_type, p_values: bool) -> T.StructType:
             T.StructField("test_name", T.StringType()),
         ]
     return T.StructType(fields)
-
-
-def _tuple(row: dict, schema: T.StructType) -> tuple:
-    return tuple(row[f.name] for f in schema.fields)
 
 
 def _cat_rows(
@@ -445,7 +446,9 @@ def _cont_rows(
     return out
 
 
-def _beautify(spark: SparkSession, rows: list[dict], schema: T.StructType) -> DataFrame:
+def _beautify(
+    rows: list[dict], schema: T.StructType
+) -> tuple[list[dict], T.StructType]:
     """Reference :245-257: drop Pivoted_column/Variable_type, blank
     repeated Characteristics, "_"→" " on each group's first row."""
     first_of_group: dict[str, tuple] = {}
@@ -455,19 +458,14 @@ def _beautify(spark: SparkSession, rows: list[dict], schema: T.StructType) -> Da
         if key not in first_of_group or rank_key < first_of_group[key]:
             first_of_group[key] = rank_key
 
+    for r in rows:
+        c = r["Characteristics"]
+        first = first_of_group[c] == (r["Index"], r["Values"] or "")
+        r["Characteristics"] = (c or "").replace("_", " ") if first else None
     keep = [
         f for f in schema.fields if f.name not in ("Pivoted_column", "Variable_type")
     ]
-    out_schema = T.StructType(keep)
-    out_rows = []
-    for r in rows:
-        rr = dict(r)
-        if first_of_group[r["Characteristics"]] == (r["Index"], r["Values"] or ""):
-            rr["Characteristics"] = (r["Characteristics"] or "").replace("_", " ")
-        else:
-            rr["Characteristics"] = None
-        out_rows.append(tuple(rr[f.name] for f in keep))
-    return spark.createDataFrame(out_rows, out_schema)
+    return rows, T.StructType(keep)
 
 
 def _isnan(x) -> bool:

@@ -1,35 +1,45 @@
-"""Single-pass sufficient-statistics collection for TableOne.
+"""Sufficient-statistics collection for TableOne.
 
-The whole engine runs two phases of CONCURRENT bounded Spark jobs (≤6
-total, critical path 2), independent of the number of analyzed
-variables (the reference runs ~16 scans *per continuous variable*,
-tableone_pyspark.py:325-437, plus a full-column ``toPandas`` per
-p-value, :453/:500):
+A call reads its input in a fixed set of bounded aggregation scans,
+independent of the number of analyzed variables (the reference runs
+~16 scans *per continuous variable*, tableone_pyspark.py:325-437, plus
+a full-column ``toPandas`` per p-value, :453/:500):
 
-  phase 1 (all concurrent)
-    counts   strat-group row counts (or plain ``count()``) — scans
-             only the strat column (parquet column pruning).
-    moments  ONE ``rollup(strat)`` computing, for EVERY continuous
-             variable at once: count, min, max, avg, stddev_samp,
-             var_samp. The rollup's grand-total row is the
-             "All_Patients" column; per-strat rows are the pivot.
+  phase 1 (concurrent)
+    rollup   ONE ``rollup(strat)`` (``groupBy()`` unstratified), run in
+             the calling thread, over EVERY continuous variable at
+             once: the row count (Σw when weighted), count, min, max,
+             avg, stddev_samp, var_samp, plus the mode's extras — exact
+             ``percentile`` quartiles in interpolated mode, one global
+             HLL distinct count per variable in data mode (the quartile
+             route) — and per stratum the sanitization-collision
+             signal. Strat counts and the total are read from its rows;
+             the grand-total row is the "All_Patients" column.
     cats     ONE melted count for EVERY categorical variable at once:
              ``stack`` into (var, value) pairs, then
-             ``groupBy(var, value[, strat]).count()``. Map-side
-             partial aggregation collapses the melt immediately, so
-             the shuffle carries only Σ cardinality × strat rows.
-    probe    one global HLL pass: approximate distinct count per
-             continuous var — the quartile-strategy selector.
-  phase 2 (data mode, quartiles only, both concurrent)
+             ``groupBy(var, value[, strat]).count()``. Map-side partial
+             aggregation collapses the melt immediately, so the shuffle
+             carries only Σ cardinality × strat rows. It stays a scan of
+             its own: its groups are categories × strata, not strata.
+    wq       weighted mode only: the weighted quartiles (below).
+  phase 2 (data mode, quartiles only, all concurrent)
     sketch   vars with distinct > lowcard_quartile_max: the
-             exactness-tuned capped ``percentile_approx`` rollup —
-             the bounded-memory path near-unique columns need.
+             exactness-tuned capped ``percentile_approx`` — the
+             bounded-memory path near-unique columns need; one global
+             job and, stratified, one per-strat job.
     disc     vars with distinct ≤ lowcard_quartile_max: EXACT
              ``quantile_disc`` from distinct-value running counts
              (bounded per-group windows; no sketch cost, no
              accuracy==n+1 rank quirk).
-  (interpolated mode replaces phase 2 with exact ``percentile`` inside
-  the moments rollup — one pass, O(distinct-per-group) memory.)
+
+A stratified data-mode call with categorical, low- and high-cardinality
+variables thus reads its input five times, on a critical path of two
+(the rollup, then phase 2); an interpolated call reads it twice and a
+weighted call three times. Each scan is two Spark jobs (its shuffle map
+stage, then the collect). The traced cohort_interactive benchmark run
+(``perfbench/run.py``, seed 801) averages 9.5 jobs and 4.75 input
+scans per call. Pool threads inherit the caller's job group,
+description and tags.
 
 Only aggregated scalars ever reach the driver. The collected sizes are
 O(V·k) and O(Σ cardinalities · k) — independent of row count, so the
@@ -39,9 +49,9 @@ concurrently (threads; Spark schedules them into the shared cluster).
 Weighted mode (``weight_col``): weights are FREQUENCY weights — the
 results are defined to equal the unweighted results on a row-replicated
 frame (exactly true for integer weights; pinned by test). Rows with
-null/non-positive weight are excluded everywhere. The same bounded
-jobs collect Σw / Σwx / Σwx² instead of counts, plus ONE extra job
-for weighted quartiles: melt the continuous vars, compress to distinct
+null/non-positive weight are excluded everywhere. The rollup collects
+Σw / Σwx / Σwx² instead of counts, and ONE extra scan computes the
+weighted quartiles: melt the continuous vars, compress to distinct
 (var, value[, strat]) with their Σw (map-side combined — the shuffle
 carries distinct values, not rows), one running-sum window per
 (var, strat) partition, then ``min(x WHERE cumΣw >= p·Σw)`` — the
@@ -52,15 +62,23 @@ Memory is O(distinct values per group), the interpolated-mode regime.
 from __future__ import annotations
 
 import math
+import warnings
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.util import inheritable_thread_target
 
 from tableone_pyspark_spark.core.sanitize import MISSING, clean_strat_col
 
 #: internal strat column name — namespaced to avoid user-column clashes
 STRAT = "__t1_strat__"
+#: internal raw-strat column (stratified only): xxhash64 of the raw
+#: value as a string, NULL for a NULL raw value. The collision signal
+#: compares its min and max per stratum; a string min/max would turn
+#: the whole phase-1 rollup into a sort-based aggregate. Distinct raw
+#: values escape detection only on a 64-bit hash collision.
+RAW = "__t1_raw__"
 #: internal weight column name (weighted mode only)
 WEIGHT = "__t1_w__"
 #: global-cell marker in melted quantile frames (joins drop NULL keys;
@@ -85,8 +103,8 @@ class ContStat:
 
 @dataclass
 class Sufficient:
-    """Everything TableOne needs, collected from ≤6 bounded jobs
-    (critical path 2 phases)."""
+    """Everything TableOne needs, collected from at most five bounded
+    scans (critical path 2 phases)."""
 
     total: int
     strat_counts: dict[str, int] = field(default_factory=dict)  # cleaned value -> rows
@@ -102,39 +120,6 @@ def _quote(name: str) -> str:
 
 def _sql_str(name: str) -> str:
     return "'" + name.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
-def _cont_aggs(cont_vars: list[str], accuracy: int, quantile_mode: str) -> list:
-    aggs = []
-    for i, v in enumerate(cont_vars):
-        c = F.col(v)
-        if quantile_mode == "interpolated":
-            # exact linear-interpolated quartiles (R type-7, same rule as
-            # duckdb quantile_cont / numpy percentile). Memory is
-            # O(distinct values per group) — prefer "data" at extreme
-            # scale.
-            q = F.expr(f"percentile({_quote(v)}, array(0.25D, 0.5D, 0.75D))")
-        else:
-            # "data": accuracy-tuned percentile_approx (reference
-            # :384-388): returns an actual data value; one call returns
-            # all three quartiles from one sketch. Measured boundary
-            # semantics: while the 10k accuracy floor dominates
-            # (n < 10000) the result matches DuckDB quantile_disc
-            # rank-for-rank; at accuracy == n+1 the sketch's error
-            # budget n/(n+1) lets the returned rank sit exactly one
-            # below quantile_disc (deterministic, partitioning-
-            # independent — oracle-pinned in tableone_strat_dataq).
-            q = F.percentile_approx(c, [0.25, 0.5, 0.75], F.lit(accuracy))
-        aggs += [
-            F.count(c).alias(f"n__{i}"),
-            F.min(c).alias(f"mn__{i}"),
-            F.max(c).alias(f"mx__{i}"),
-            F.avg(c).alias(f"av__{i}"),
-            F.stddev_samp(c).alias(f"sd__{i}"),
-            F.var_samp(c).alias(f"vr__{i}"),
-            q.alias(f"q__{i}"),
-        ]
-    return aggs
 
 
 def _row_to_stats(row, i: int, q_override: tuple | None = None) -> ContStat:
@@ -156,8 +141,7 @@ def _row_to_stats(row, i: int, q_override: tuple | None = None) -> ContStat:
 
 
 def _moment_aggs(cont_vars: list[str]) -> list:
-    """Data-mode phase 1: moments only — NO quartile sketch (quartiles
-    come from phase 2, routed by the concurrent cardinality probe)."""
+    """Per-variable moments: count, min, max, avg, stddev_samp, var_samp."""
     aggs = []
     for i, v in enumerate(cont_vars):
         c = F.col(v)
@@ -172,9 +156,55 @@ def _moment_aggs(cont_vars: list[str]) -> list:
     return aggs
 
 
+def _phase1_aggs(
+    cont_vars: list[str],
+    stratified: bool,
+    weighted: bool,
+    quantile_mode: str,
+    probe: bool,
+) -> list:
+    """The one phase-1 aggregation over ``work``: the row count (Σw
+    when weighted), the mode's per-variable aggregates, the global HLL
+    that routes data-mode quartiles (``probe``) and, stratified, the
+    sanitization-collision signal."""
+    aggs = [(F.sum(WEIGHT) if weighted else F.count(F.lit(1))).alias("__c")]
+    if stratified:
+        # more than one distinct non-null raw value behind one cleaned
+        # value <=> min != max of their hashes (see RAW)
+        aggs += [F.min(RAW).alias("__rmin"), F.max(RAW).alias("__rmax")]
+    if weighted:
+        return aggs + _cont_aggs_weighted(cont_vars)
+    aggs += _moment_aggs(cont_vars)
+    for i, v in enumerate(cont_vars):
+        if quantile_mode == "interpolated":
+            # exact linear-interpolated quartiles (R type-7, same rule as
+            # duckdb quantile_cont / numpy percentile). Memory is
+            # O(distinct values per group) — prefer "data" at extreme
+            # scale.
+            aggs.append(
+                F.expr(f"percentile({_quote(v)}, array(0.25D, 0.5D, 0.75D))")
+                .alias(f"q__{i}")
+            )
+        elif probe:
+            # deterministic (hash-based) HLL: the routing is stable
+            # across runs and partitionings. Only the grand-total row's
+            # estimate is read.
+            aggs.append(F.approx_count_distinct(F.col(v)).alias(f"cd__{i}"))
+    return aggs
+
+
 def _sketch_aggs(pairs: list[tuple[int, str]], accuracy: int) -> list:
     """Data-mode phase 2a: the accuracy-tuned sketch, only for the
-    high-cardinality vars (original indices preserved in aliases)."""
+    high-cardinality vars (original indices preserved in aliases).
+
+    percentile_approx (reference :384-388) returns an actual data
+    value; one call returns all three quartiles from one sketch.
+    Measured boundary semantics: while the 10k accuracy floor dominates
+    (n < 10000) the result matches DuckDB quantile_disc rank-for-rank;
+    at accuracy == n+1 the sketch's error budget n/(n+1) lets the
+    returned rank sit exactly one below quantile_disc (deterministic,
+    partitioning-independent — oracle-pinned in tableone_strat_dataq).
+    """
     return [
         F.percentile_approx(F.col(v), [0.25, 0.5, 0.75], F.lit(accuracy)).alias(
             f"q__{i}"
@@ -243,156 +273,40 @@ def collect_sufficient(
     weight_col: str | None = None,
     lowcard_quartile_max: int = 2_048,
 ) -> Sufficient:
-    """Run the bounded job set (two concurrent phases in data mode;
-    +1 weighted-quantile job in weighted mode) and return every
-    statistic TableOne needs."""
+    """Run the phase-1 rollup (with the melt, and the weighted-quantile
+    job when weighted, in the pool), then data mode's phase 2, and
+    return every statistic TableOne needs."""
     stratified = col_to_strat != ""
     weighted = weight_col is not None
+    data_mode = not weighted and quantile_mode != "interpolated" and bool(cont_vars)
     base = df
     if weighted:
         wc = F.col(_quote(weight_col)).cast("double")
         base = df.where(wc.isNotNull() & (wc > 0))
     select_cols = [F.col(_quote(v)) for v in dict.fromkeys(cat_vars + cont_vars)]
     if stratified:
-        select_cols.append(clean_strat_col(col_to_strat).alias(STRAT))
+        raw = F.col(_quote(col_to_strat)).cast("string")
+        select_cols += [
+            clean_strat_col(col_to_strat).alias(STRAT),
+            F.when(raw.isNotNull(), F.xxhash64(raw)).alias(RAW),
+        ]
     if weighted:
         select_cols.append(F.col(_quote(weight_col)).cast("double").alias(WEIGHT))
     work = base.select(*select_cols)
 
     out = Sufficient(total=0)
-    count_agg = (
-        F.sum(F.col(_quote(weight_col)).cast("double"))
-        if weighted
-        else F.count(F.lit(1))
-    )
 
-    # ---- job 1: strat group counts / total ------------------------------
-    def run_counts():
-        if stratified:
-            rows = (
-                base.select(
-                    F.col(_quote(col_to_strat)).alias("__raw"),
-                    clean_strat_col(col_to_strat).alias(STRAT),
-                    *([F.col(_quote(weight_col))] if weighted else []),
-                )
-                # two-level aggregation instead of count_distinct (r17):
-                # a count_distinct alongside another agg plans an
-                # Expand-based two-phase distinct that ships every raw
-                # value through the expand; grouping by (cleaned, raw)
-                # first map-side-combines to the tiny distinct-pair set,
-                # and the second-level agg then derives BOTH the group
-                # count (sum of per-raw counts — exact: integer counts,
-                # and weighted Σw is exact for the integral-weight
-                # contract) and the collision signal (__nraw = rows per
-                # cleaned value). Same results, ~25% cheaper job.
-                .groupBy(STRAT, "__raw")
-                .agg(count_agg.alias("__c"))
-                .groupBy(STRAT)
-                .agg(
-                    F.sum("__c").alias("count"),
-                    # sanitization-collision detection (SURVEY Q9): >1
-                    # distinct raw value mapping onto one cleaned value
-                    # means categories silently merged ("a b" ≡ "a_b";
-                    # distinct non-ASCII runs ≡ "?"). count over the
-                    # per-raw groups' __raw (not count(1)) so the NULL
-                    # raw group is excluded — byte-identical to the old
-                    # count_distinct semantics
-                    F.count(F.col("__raw")).alias("__nraw"),
-                )
-                .collect()
-            )
-            collided = sorted(r[STRAT] for r in rows if r["__nraw"] > 1)
-            if collided:
-                import warnings
-
-                warnings.warn(
-                    f"strat sanitization merged distinct raw values into "
-                    f"{collided} (spaces→'_', non-ASCII→'?'; reference "
-                    ":89-92 semantics, SURVEY Q9)",
-                    stacklevel=4,
-                )
-            counts = {r[STRAT]: r["count"] for r in rows}
-            if len(counts) > strat_cardinality_limit:
-                raise ValueError(
-                    f"stratification column {col_to_strat!r} has "
-                    f"{len(counts)} distinct values "
-                    f"(> limit {strat_cardinality_limit}); the output schema grows "
-                    "with strat cardinality — raise strat_cardinality_limit "
-                    "explicitly if this is intended"
-                )
-            return counts, sum(counts.values())
-        if weighted:
-            row = work.agg(F.sum(WEIGHT).alias("t")).collect()[0]
-            return {}, row["t"] or 0.0
-        return {}, work.count()
-
-    def run_cont(total: int):
-        # weighted / interpolated modes: one pass, unchanged shape.
-        aggs = (
-            _cont_aggs_weighted(cont_vars)
-            if weighted
-            else _cont_aggs(cont_vars, 0, quantile_mode)
-        )
-        if stratified:
-            # rollup == grouping sets {(strat), ()}: per-strat cells AND
-            # the grand total in ONE pass. Cleaned strat is never null,
-            # so the null-strat row is unambiguously the total.
-            return work.rollup(STRAT).agg(*aggs).collect()
-        return work.groupBy().agg(*aggs).collect()
-
-    def run_cont_moments():
-        # data-mode phase 1: moments; quartiles come from phase 2.
-        aggs = _moment_aggs(cont_vars)
-        if stratified:
-            return work.rollup(STRAT).agg(*aggs).collect()
-        return work.groupBy().agg(*aggs).collect()
-
-    def run_cardinality():
-        # the quartile-strategy selector: GLOBAL approximate distinct
-        # counts only (no rollup Expand — per-strat cardinality is
-        # irrelevant to the split), one cheap HLL pass concurrent with
-        # counts + moments. Deterministic (hash-based), so the routing
-        # is stable across runs and partitionings.
-        row = work.groupBy().agg(
-            *[
-                F.approx_count_distinct(F.col(v)).alias(f"cd__{i}")
-                for i, v in enumerate(cont_vars)
-            ]
-        ).collect()[0]
-        return [row[f"cd__{i}"] or 0 for i in range(len(cont_vars))]
-
-    def _sketch_accuracy(pairs: list[tuple[int, str]], total: int) -> int:
-        accuracy = min(max(total + 1, 10_000), exact_percentile_cap)
-        if total + 1 > exact_percentile_cap:
-            import warnings
-
-            warnings.warn(
-                f"{total} rows exceed exact_percentile_cap="
-                f"{exact_percentile_cap}: quartiles of high-cardinality "
-                f"variables {[v for _i, v in pairs]} are approximate "
-                f"(<=1/{exact_percentile_cap} relative rank error), not "
-                "the reference's exact data values. Raise the cap or use "
-                'quantile_mode="interpolated" for exact quartiles.',
-                stacklevel=7,
-            )
-        return accuracy
-
-    def run_cont_sketch(pairs, total: int, scope: str = "all"):
-        # data-mode phase 2a (high-cardinality vars only): the
-        # reference's accuracy = max(n+1, 10000) makes the sketch
-        # return exact data values; capped so it stays bounded at scale
-        # (documented deviation above the cap). r17 (guide §2.6): the
-        # stratified case runs as TWO CONCURRENT jobs — the global
-        # sketch ("global" scope) and the per-strat sketch ("strat"
-        # scope) — instead of one rollup whose Expand pushed every row
-        # through the sketch twice serially. Results are data values
-        # selected by rank, so each cell's value depends only on the
-        # multiset of rows it aggregates — identical either way (and
-        # exact whenever accuracy >= n+1, the graded regime). Returns
-        # (strat_key, row) pairs.
-        accuracy = _sketch_accuracy(pairs, total)
-        aggs = _sketch_aggs(pairs, accuracy)
-        if scope == "strat":
+    def run_sketch(aggs: list, per_strat: bool):
+        # data-mode phase 2a (high-cardinality vars only). r17 (guide
+        # §2.6): the stratified case runs as TWO CONCURRENT jobs — the
+        # global sketch and the per-strat sketch — instead of one rollup
+        # whose Expand pushed every row through the sketch twice
+        # serially. Results are data values selected by rank, so each
+        # cell's value depends only on the multiset of rows it
+        # aggregates — identical either way (and exact whenever
+        # accuracy >= n+1, the graded regime). Returns (strat_key, row)
+        # pairs.
+        if per_strat:
             return [
                 (r[STRAT], r)
                 for r in work.groupBy(STRAT).agg(*aggs).collect()
@@ -646,78 +560,110 @@ def collect_sufficient(
             )
         return rows
 
-    # ---- schedule the jobs with maximal overlap -------------------------
-    # The categorical melt never depends on anything else. In "data"
-    # mode the flow is two phases: {counts ∥ moments+HLL ∥ melt}, then
-    # the HLL estimates split the quartile work into {sketch for
-    # high-cardinality vars ∥ exact disc for low-cardinality vars} —
-    # both bounded, both concurrent. Weighted/interpolated keep their
-    # one-pass shapes. Spark's scheduler interleaves the concurrent
-    # jobs across the cluster.
-    cont_rows: list = []
-    cat_rows: list = []
-    wq_rows: list = []
-    sketch_rows: list = []
-    lowcard_vars: set[str] = set()
-    data_mode = (not weighted) and quantile_mode != "interpolated" and cont_vars
-    with ThreadPoolExecutor(max_workers=8) as pool:
-        # 8 workers = the worst-case concurrent job set (counts ∥
-        # moments ∥ melt ∥ probe, then sketch-global ∥ sketch-strat ∥
-        # disc while the melt may still be running) — a smaller pool
-        # would serialize phase 2 behind whichever phase-1 job is the
-        # long pole
-        f_cat = pool.submit(run_cat) if cat_vars else None
-        if weighted and cont_vars:
-            # weighted moments need no accuracy tuning -> all 4 jobs
-            # are independent; run everything concurrently
-            f_counts = pool.submit(run_counts)
-            f_cont = pool.submit(run_cont, 0)
-            f_wq = pool.submit(run_wq)
-            out.strat_counts, out.total = f_counts.result()
-            cont_rows = f_cont.result()
-            wq_rows = f_wq.result()
-        elif cont_vars and quantile_mode == "interpolated":
-            f_counts = pool.submit(run_counts)
-            f_cont = pool.submit(run_cont, 0)
-            out.strat_counts, out.total = f_counts.result()
-            cont_rows = f_cont.result()
-        elif cont_vars:
-            f_counts = pool.submit(run_counts)
-            f_cont = pool.submit(run_cont_moments)
-            if lowcard_quartile_max > 0:
-                f_card = pool.submit(run_cardinality)
-                cards = f_card.result()
-            else:
-                # sketch-for-everything pin: the probe could not route
-                # anything to the disc path — skip its full scan
-                cards = [lowcard_quartile_max + 1] * len(cont_vars)
-            out.strat_counts, out.total = f_counts.result()
-            high = []
-            low = []
-            for i, v in enumerate(cont_vars):
-                (low if cards[i] <= lowcard_quartile_max else high).append(
-                    (i, v)
+    # ---- schedule ---------------------------------------------------------
+    # The melt and the weighted-quantile job depend on nothing, so they
+    # start first, in the pool. Phase 1 is ONE aggregation in the
+    # calling thread: rollup(strat) == grouping sets {(strat), ()}, so
+    # per-strat cells AND the grand total (the "All_Patients" column) in
+    # one pass; the cleaned strat is never null, so the null-strat row is
+    # unambiguously the total. In data mode its HLL estimates then split
+    # the quartiles into {sketch for high-cardinality vars ∥ exact disc
+    # for low-cardinality vars} (phase 2).
+    #
+    # Carry the caller's job group, description and tags into the pool
+    # threads. With pinned-thread mode off, PySpark hands back the
+    # session itself, and there is nothing to carry.
+    spark = df.sparkSession
+    carry = inheritable_thread_target(spark)
+    if carry is spark:
+        carry = lambda fn: fn  # noqa: E731
+    with ThreadPoolExecutor(max_workers=4) as pool:
+        # 4 = the widest concurrent set: the melt ∥ sketch-global ∥
+        # sketch-strat ∥ disc
+        def submit(fn, *args):
+            return pool.submit(carry(fn), *args)
+
+        f_cat = submit(run_cat) if cat_vars else None
+        f_wq = submit(run_wq) if weighted and cont_vars else None
+
+        probe = data_mode and lowcard_quartile_max > 0
+        aggs = _phase1_aggs(cont_vars, stratified, weighted, quantile_mode, probe)
+        if stratified:
+            # at most limit + 2 rows (strata plus the total row) reach
+            # the driver: an id column used as the strat column fails fast
+            rows = (
+                work.rollup(STRAT)
+                .agg(*aggs)
+                .limit(strat_cardinality_limit + 2)
+                .collect()
+            )
+            if len(rows) > strat_cardinality_limit + 1:
+                raise ValueError(
+                    f"stratification column {col_to_strat!r} has more than "
+                    f"{strat_cardinality_limit} distinct values; the output "
+                    "schema grows with strat cardinality — raise "
+                    "strat_cardinality_limit explicitly if this is intended"
                 )
+            total_row = next((r for r in rows if r[STRAT] is None), None)
+            strat_rows = [r for r in rows if r[STRAT] is not None]
+        else:
+            rows = work.groupBy().agg(*aggs).collect()
+            total_row, strat_rows = rows[0], []
+        if total_row is None and cont_vars:
+            # only an empty stratified input leaves the rollup without
+            # its grand-total row
+            raise RuntimeError("rollup produced no grand-total row")
+        out.total = (total_row["__c"] if total_row else None) or 0
+        out.strat_counts = {r[STRAT]: r["__c"] for r in strat_rows}
+        # sanitization-collision detection (SURVEY Q9): distinct raw
+        # values mapping onto one cleaned value mean categories silently
+        # merged ("a b" ≡ "a_b"; distinct non-ASCII runs ≡ "?")
+        collided = sorted(r[STRAT] for r in strat_rows if r["__rmin"] != r["__rmax"])
+        if collided:
+            warnings.warn(
+                f"strat sanitization merged distinct raw values into "
+                f"{collided} (spaces→'_', non-ASCII→'?'; reference "
+                ":89-92 semantics, SURVEY Q9)",
+                stacklevel=3,
+            )
+
+        sketch_rows: list = []
+        wq_rows: list = []
+        lowcard_vars: set[str] = set()
+        if data_mode:
+            # lowcard_quartile_max=0 pins the sketch for everything, and
+            # the HLL is then left out of phase 1
+            high, low = [], []
+            for i, v in enumerate(cont_vars):
+                lowcard = probe and (total_row[f"cd__{i}"] or 0) <= lowcard_quartile_max
+                (low if lowcard else high).append((i, v))
             lowcard_vars = {v for _i, v in low}
             f_sketches = []
             if high:
-                f_sketches.append(
-                    pool.submit(run_cont_sketch, high, out.total, "global")
-                )
-                if stratified:
-                    f_sketches.append(
-                        pool.submit(
-                            run_cont_sketch, high, out.total, "strat"
-                        )
+                # the reference's accuracy = max(n+1, 10000) makes the
+                # sketch return exact data values; capped so it stays
+                # bounded at scale (documented deviation above the cap)
+                accuracy = min(max(out.total + 1, 10_000), exact_percentile_cap)
+                if out.total + 1 > exact_percentile_cap:
+                    warnings.warn(
+                        f"{out.total} rows exceed exact_percentile_cap="
+                        f"{exact_percentile_cap}: quartiles of high-cardinality "
+                        f"variables {[v for _i, v in high]} are approximate "
+                        f"(<=1/{exact_percentile_cap} relative rank error), not "
+                        "the reference's exact data values. Raise the cap or use "
+                        'quantile_mode="interpolated" for exact quartiles.',
+                        stacklevel=3,
                     )
-            f_low = pool.submit(run_lowcard_disc, low) if low else None
-            cont_rows = f_cont.result()
+                sketch = _sketch_aggs(high, accuracy)
+                f_sketches.append(submit(run_sketch, sketch, False))
+                if stratified:
+                    f_sketches.append(submit(run_sketch, sketch, True))
+            f_low = submit(run_lowcard_disc, low) if low else None
             sketch_rows = [kr for f in f_sketches for kr in f.result()]
             wq_rows = f_low.result() if f_low is not None else []
-        else:
-            out.strat_counts, out.total = run_counts()
-        if f_cat is not None:
-            cat_rows = f_cat.result()
+        if f_wq is not None:
+            wq_rows = f_wq.result()
+        cat_rows = f_cat.result() if f_cat is not None else []
 
     # ---- unpack ---------------------------------------------------------
     quarts: dict[tuple[str, str | None], tuple] = {}
@@ -731,7 +677,7 @@ def collect_sufficient(
         sketch_by_key[key] = row
     for i, v in enumerate(cont_vars):
         out.cont[v] = {}
-    for row in cont_rows:
+    for row in rows:
         key = row[STRAT] if stratified else None
         for i, v in enumerate(cont_vars):
             if weighted:
@@ -752,9 +698,6 @@ def collect_sufficient(
                 out.cont[v][key] = _row_to_stats(row, i, q_override=q)
             else:
                 out.cont[v][key] = _row_to_stats(row, i)
-    if stratified and cont_vars and None not in out.cont[cont_vars[0]]:
-        # defensive: rollup always emits the grand-total row
-        raise RuntimeError("rollup produced no grand-total row")
 
     for v in cat_vars:
         out.cat[v] = {}

@@ -125,3 +125,18 @@ def test_weighted_fully_excluded_stratum_drops_its_columns(spark):
         df, col_to_strat="s", cols_to_analyze=["c", "v"], weight_col="w"
     )
     assert "A" in out.columns and "B" not in out.columns
+
+
+def test_strat_cardinality_limit(spark):
+    """One stratum past ``strat_cardinality_limit`` fails fast; exactly
+    ``limit`` strata pass."""
+    from tableone_pyspark_spark import TableOneConfig
+
+    cfg = TableOneConfig(strat_cardinality_limit=3)
+    df = spark.range(4).selectExpr("CAST(id AS STRING) AS g", "CAST(id AS DOUBLE) AS x")
+    with pytest.raises(ValueError, match="more than 3 distinct values"):
+        tableone(df, col_to_strat="g", cols_to_analyze=["x"], config=cfg)
+    out = tableone(
+        df.where("id < 3"), col_to_strat="g", cols_to_analyze=["x"], config=cfg
+    )
+    assert ["0", "1", "2"] == [c for c in out.columns if c in {"0", "1", "2", "3"}]

@@ -4,13 +4,26 @@ patients fixture (reference testing.py:18-29; contract SURVEY §1.2)."""
 from __future__ import annotations
 
 import math
+import struct
 import warnings
 
 import pytest
 
 from tableone_pyspark_spark import tableone
+from tableone_pyspark_spark.plans import inspect
 
 from conftest import approx, rows_by_index
+
+NAN = float("nan")
+
+
+def _local(df) -> bool:
+    """The result is a local relation: collecting it runs no job."""
+    return inspect.executed_plan(df).startswith("LocalTableScan")
+
+
+def _bits(x):
+    return None if x is None else struct.pack(">d", x)
 
 
 # ---------------------------------------------------------------------------
@@ -42,7 +55,9 @@ def test_unstratified_categorical_counts_and_order(patients):
     assert approx(rows[(1.01, "John")]["All_Patients_%"], 0.3)
     assert rows[(1.01, "John")]["Variable_type"] == "category"
     # only categorical vars -> counts stay integral (long)
-    assert dict(tableone(patients, cols_to_analyze=["name"]).dtypes)["All_Patients"] == "bigint"
+    out = tableone(patients, cols_to_analyze=["name"])
+    assert dict(out.dtypes)["All_Patients"] == "bigint"
+    assert _local(out)
 
 
 def test_unstratified_continuous_stats(patients):
@@ -190,11 +205,29 @@ def test_p_values_anova_and_chisq(patients):
 
 
 def test_p_values_t_test_two_groups(spark):
-    data = [("A", 1.0), ("A", 2.0), ("A", 4.0), ("B", 2.0), ("B", 5.0), ("B", 9.0)]
-    df = spark.createDataFrame(data, "g string, x double")
-    rows = rows_by_index(
-        tableone(df, col_to_strat="g", cols_to_analyze=["x"], p_values=True)
-    )
+    # y holds NaN, None and -0.0: the result is a local relation and
+    # hands every cell back bit for bit
+    data = [
+        ("A", 1.0, NAN), ("A", 2.0, None), ("A", 4.0, -0.0),
+        ("B", 2.0, -0.0), ("B", 5.0, None), ("B", 9.0, None),
+    ]
+    df = spark.createDataFrame(data, "g string, x double, y double")
+    out = tableone(df, col_to_strat="g", cols_to_analyze=["x", "y"], p_values=True)
+    assert _local(out)
+    rows = rows_by_index(out)
+    expected = {  # (All_Patients, A, B)
+        (2.1, "n"): (3.0, 2.0, 1.0),
+        (2.2, "min"): (-0.0, -0.0, -0.0),
+        (2.3, "max"): (NAN, NAN, -0.0),
+        (2.4, "mean"): (NAN, NAN, 0.0),
+        (2.5, "stddev"): (NAN, NAN, None),
+        (2.6, "25th percentile"): (0.0, 0.0, 0.0),
+        (2.7, "50th percentile"): (0.0, 0.0, 0.0),
+        (2.8, "75th percentile"): (NAN, NAN, 0.0),
+    }
+    for key, cells in expected.items():
+        got = tuple(rows[key][c] for c in ("All_Patients", "A", "B"))
+        assert list(map(_bits, got)) == list(map(_bits, cells)), (key, got)
     anchor = rows[(1.1, "n")]
     # textbook pooled-variance t from raw data
     a, b = [1.0, 2.0, 4.0], [2.0, 5.0, 9.0]
@@ -268,6 +301,7 @@ def test_beautify(patients):
     )
     assert "Pivoted_column" not in out.columns
     assert "Variable_type" not in out.columns
+    assert _local(out)
     rows = out.collect()
     # each Characteristics appears exactly once (first row of its block)
     named = [r["Characteristics"] for r in rows if r["Characteristics"] is not None]
@@ -524,3 +558,63 @@ def test_weighted_tableone_rejects_bad_weight_col(spark):
         tableone(df, cols_to_analyze=["g"], weight_col="w")
     with pytest.raises(ValueError, match="not in DataFrame"):
         tableone(df, cols_to_analyze=["g"], weight_col="nope")
+
+
+def test_every_job_of_a_call_carries_the_callers_job_group(spark):
+    """Jobs run from collect_sufficient's pool (melt, sketches, disc)
+    inherit the caller's job group, so a call's jobs can be named and
+    cancelled together."""
+    from pyspark.sql import functions as F
+
+    from tableone_pyspark_spark import TableOneConfig
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    df = spark.range(400).select(
+        F.when(F.col("id") % 2 == 0, "a").otherwise("b").alias("g"),
+        (F.col("id") % 3).cast("string").alias("c"),
+        (F.col("id") % 4).cast("double").alias("lx"),  # exact disc
+        (F.col("id") * 1.0 + 0.5).alias("hx"),  # sketch
+    )
+    before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("tableone-job-group-test", "tableone call")
+    try:
+        tableone(
+            df, col_to_strat="g", cols_to_analyze=["c", "lx", "hx"],
+            config=TableOneConfig(lowcard_quartile_max=10),
+        ).collect()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert set(tracker.getJobIdsForGroup(None)) - before == set()
+    # rollup, melt, global sketch, per-strat sketch, disc: two jobs each
+    # (shuffle map stage + result); the result collect runs none
+    assert 0 < len(tracker.getJobIdsForGroup("tableone-job-group-test")) <= 10
+
+
+def test_call_runs_with_pinned_threads_off():
+    """With PYSPARK_PIN_THREAD=false PySpark has no job group to carry
+    into pool threads (it hands the session back from
+    inheritable_thread_target); a call must still run."""
+    import os
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    code = (
+        "from pyspark.sql import SparkSession\n"
+        "from tableone_pyspark_spark import tableone\n"
+        "s = (SparkSession.builder.master('local[1]')"
+        ".config('spark.ui.enabled', 'false').getOrCreate())\n"
+        "df = s.createDataFrame([('a', 'x', 1.0), ('b', 'y', 2.0)], 'g string, c string, v double')\n"
+        "print(len(tableone(df, col_to_strat='g', cols_to_analyze=['c', 'v']).collect()))\n"
+    )
+    done = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=Path(__file__).resolve().parents[1],
+        env=dict(os.environ, PYSPARK_PIN_THREAD="false"),
+        capture_output=True, text=True, timeout=600,
+    )
+    assert done.returncode == 0, done.stderr[-3000:]
+    assert done.stdout.split()[-1] == "11"  # total, 2 categories, 8 stats

@@ -24,17 +24,27 @@ def lineitem(spark):
 
 
 def test_sufficient_stats_scan_pruning(lineitem):
-    # the rollup job must read ONLY the analyzed + strat columns
+    # the phase-1 rollup job must read ONLY the analyzed + strat columns
     from tableone_pyspark_spark.core.sanitize import clean_strat_col
-    from tableone_pyspark_spark.core.sufficient import STRAT, _cont_aggs
+    from tableone_pyspark_spark.core.sufficient import RAW, STRAT, _phase1_aggs
 
+    raw = F.col("l_returnflag").cast("string")
     work = lineitem.select(
-        F.col("l_quantity"), clean_strat_col("l_returnflag").alias(STRAT)
+        F.col("l_quantity"),
+        clean_strat_col("l_returnflag").alias(STRAT),
+        F.when(raw.isNotNull(), F.xxhash64(raw)).alias(RAW),
     )
-    plan = work.rollup(STRAT).agg(*_cont_aggs(["l_quantity"], 10_000, "data"))
+    aggs = _phase1_aggs(
+        ["l_quantity"], stratified=True, weighted=False, quantile_mode="data",
+        probe=True,
+    )
+    plan = work.rollup(STRAT).agg(*aggs)
     inspect.assert_scan_pruned(plan, {"l_quantity", "l_returnflag"})
     facts = inspect.plan_facts(plan)
     assert facts.n_exchanges == 1  # exactly one shuffle: partial → final agg
+    # moments, HLL and the collision signal keep it a hash aggregation
+    # (a string min/max would sort every expanded row)
+    assert "SortAggregate" not in inspect.executed_plan(plan)
 
 
 def test_categorical_melt_single_shuffle(lineitem):
