@@ -2026,13 +2026,16 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # fits on a 2-thread pool; same operator calls, same results
         from concurrent.futures import ThreadPoolExecutor
 
+        from tableone_pyspark_spark.core.trace import carry_job_context
+
+        carry = carry_job_context(spark)
         with ThreadPoolExecutor(max_workers=2) as pool:
             f_win = pool.submit(
-                ops.winsorize_stats, li, "l_extendedprice",
+                carry(ops.winsorize_stats), li, "l_extendedprice",
                 lower=0.01, upper=0.99,
             )
             f_cuts = pool.submit(
-                ops.fit_quantile_cuts, li, "l_extendedprice",
+                carry(ops.fit_quantile_cuts), li, "l_extendedprice",
                 n_buckets=8, exact=True,
             )
             win_stats = f_win.result()
@@ -3454,7 +3457,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # y_j = sum_i (x_i - mu_i) * V[i,j] as 8 per-column fold
         # literals (the opq_recall retrain-in-oracle precedent; seam
         # fold-vs-GEMM measured ~1e-15 with zero ROUND(6) flips at
-        # both grading SFs — scripts/scale_check_r12.py re-measures).
+        # both grading SFs).
         from tableone_pyspark_spark.operators.pca import fit_pca, pca_project
 
         e = _load(spark, sf_dir, "embeddings")
@@ -3893,6 +3896,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
             # order the union listed.
             from concurrent.futures import ThreadPoolExecutor
 
+            from tableone_pyspark_spark.core.trace import carry_job_context
+
             arm_frames = [
                 agg("v1_ds", ds(t, 1)),
                 agg("v2_ds", ds(t, 2)),
@@ -3910,12 +3915,11 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
                 agg("ren_prune", ren_pr),
                 ident_arm,
             ]
+            collect = carry_job_context(spark)(lambda df: df.collect())
             with ThreadPoolExecutor(max_workers=8) as pool:
                 rows = [
                     r
-                    for part in pool.map(
-                        lambda df: df.collect(), arm_frames
-                    )
+                    for part in pool.map(collect, arm_frames)
                     for r in part
                 ]
         finally:

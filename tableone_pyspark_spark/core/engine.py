@@ -32,7 +32,6 @@ whole columns to the driver for p-values (:453, :500).
 
 from __future__ import annotations
 
-import math
 import warnings
 from dataclasses import dataclass
 
@@ -466,7 +465,3 @@ def _beautify(
         f for f in schema.fields if f.name not in ("Pivoted_column", "Variable_type")
     ]
     return rows, T.StructType(keep)
-
-
-def _isnan(x) -> bool:
-    return isinstance(x, float) and math.isnan(x)

@@ -35,22 +35,6 @@ def clean_strat_col(name: str) -> Column:
     return c
 
 
-def sanitize_value(v) -> str:
-    """Driver-side equivalent of :func:`clean_strat_col` for one value."""
-    if v is None:
-        return MISSING
-    s = str(v).replace(" ", "_")
-    out, in_run = [], False
-    for ch in s:
-        if ord(ch) < 128:
-            out.append(ch)
-            in_run = False
-        elif not in_run:
-            out.append("?")
-            in_run = True
-    return "".join(out)
-
-
 def order_strat_values(values) -> list[str]:
     """Pivot-column order: sorted asc; "Yes" before "No" at the front;
     "MISSING" last (reference tableone_pyspark.py:100-115).

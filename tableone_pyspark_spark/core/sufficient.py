@@ -67,9 +67,9 @@ from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.util import inheritable_thread_target
 
 from tableone_pyspark_spark.core.sanitize import MISSING, clean_strat_col
+from tableone_pyspark_spark.core.trace import carry_job_context
 
 #: internal strat column name — namespaced to avoid user-column clashes
 STRAT = "__t1_strat__"
@@ -337,7 +337,6 @@ def collect_sufficient(
         cells = g.limit(cat_cells_limit + 1).collect()
         if len(cells) > cat_cells_limit:
             return _run_lowcard_disc_windowed(vars_)
-        import math
 
         per_group: dict[tuple, dict] = {}
         for r in cells:
@@ -569,14 +568,7 @@ def collect_sufficient(
     # unambiguously the total. In data mode its HLL estimates then split
     # the quartiles into {sketch for high-cardinality vars ∥ exact disc
     # for low-cardinality vars} (phase 2).
-    #
-    # Carry the caller's job group, description and tags into the pool
-    # threads. With pinned-thread mode off, PySpark hands back the
-    # session itself, and there is nothing to carry.
-    spark = df.sparkSession
-    carry = inheritable_thread_target(spark)
-    if carry is spark:
-        carry = lambda fn: fn  # noqa: E731
+    carry = carry_job_context(df.sparkSession)
     with ThreadPoolExecutor(max_workers=4) as pool:
         # 4 = the widest concurrent set: the melt ∥ sketch-global ∥
         # sketch-strat ∥ disc

@@ -26,29 +26,6 @@ def props_k(c: Column) -> Column:
     return F.from_json(c, PROPS_SCHEMA)["k"]
 
 
-def hourly_type_stats(events: DataFrame) -> DataFrame:
-    """Per (event_type, hour): count, avg value, sum value, avg k.
-
-    One hash aggregation; the hour comes from date_trunc so partition
-    pruning on a date-partitioned source still applies.
-    """
-    return (
-        events.select(
-            F.col("event_type"),
-            F.date_trunc("hour", F.col("ts")).alias("hour"),
-            F.col("value"),
-            props_k(F.col("props")).alias("k"),
-        )
-        .groupBy("event_type", "hour")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.avg("value"), 6).alias("avg_value"),
-            F.round(F.sum("value"), 6).alias("sum_value"),
-            F.round(F.avg("k"), 6).alias("avg_k"),
-        )
-    )
-
-
 def type_value_stats(events: DataFrame) -> DataFrame:
     """Per event_type: n, avg/min/max of value, avg of props.k."""
     return (

@@ -12,22 +12,21 @@ GIF87a and GIF89a, global and local color tables of any spec size
 (2..256), interlaced (4-pass) and sequential frames, the full
 variable-width LZW scheme (deferred-clear tolerant: a full 4096-entry
 table keeps decoding at 12 bits until an explicit Clear), Graphic
-Control Extensions (transparency index, disposal methods 0-3),
-multi-frame animations composed onto the logical screen with correct
-disposal (none / keep / restore-background / restore-previous), and
-skip-tolerant handling of comment / application / plain-text
-extensions. Output is always an (h, w, 3) uint8 RGB canvas per frame
-(GIF pixels are palette indices; transparency controls compositing,
-not an alpha channel — matching how browsers rasterize stills).
+Control Extensions (transparency index), multi-frame animations
+(the first frame is composed onto the logical screen; ``gif_meta``
+counts the rest), and skip-tolerant handling of comment / application
+/ plain-text extensions. Output is always an (h, w, 3) uint8 RGB
+canvas (GIF pixels are palette indices; transparency controls
+compositing, not an alpha channel — matching how browsers rasterize
+stills).
 
 Hostile-input hardening (untrusted web-crawl corpora): logical-screen
 and per-frame dimensions are bounded by ``MAX_PIXELS`` BEFORE any
 allocation; the LZW inflator stops at the frame's declared pixel count
 (a compression bomb cannot out-allocate the already-bounded target
-buffer) and rejects truncated or corrupt code streams; animation
-decodes are bounded by ``MAX_TOTAL_PIXELS`` summed across frames so a
-million-frame bomb fails fast. Every hostile path raises ``ValueError``
-— never struct.error, never OOM (same contract as png.py/jpeg.py).
+buffer) and rejects truncated or corrupt code streams. Every hostile
+path raises ``ValueError`` — never struct.error, never OOM (same
+contract as png.py/jpeg.py).
 
 Performance note: LZW is a Python loop over codes (inherently serial —
 each code extends the dictionary the next one may reference). Fine for
@@ -48,11 +47,6 @@ GIF_MAGICS = (b"GIF87a", b"GIF89a")
 #: bomb guard on any single allocation (logical screen or one frame),
 #: matching png.py's PIL-calibrated default. Overridable per call.
 MAX_PIXELS = 89_478_485
-
-#: bomb guard on the SUM of frame pixels in an animation decode — the
-#: uint8 RGB canvas is 3 B/pixel, so this bounds worst-case memory at
-#: ~256 MB per payload regardless of frame count.
-MAX_TOTAL_PIXELS = MAX_PIXELS
 
 
 def is_gif(payload: bytes) -> bool:
@@ -258,21 +252,17 @@ def _header(payload: bytes, max_pixels: int) -> tuple[int, int, np.ndarray | Non
 
 class _Frame:
     __slots__ = ("left", "top", "w", "h", "interlace", "palette",
-                 "indices", "transparent", "disposal", "delay_cs")
+                 "indices", "transparent")
 
 
-def _parse_frames(payload: bytes, max_pixels: int, max_total: int,
-                  first_only: bool):
-    """Walk the block stream yielding decoded frames; shared by the
-    decoders and (with ``indices`` skipped) by :func:`gif_meta`."""
+def _parse_first_frame(payload: bytes, max_pixels: int):
+    """Walk the block stream up to the first image and decode it; the
+    walk :func:`gif_meta` repeats (with the LZW streams skipped) over
+    every frame."""
     sw, sh, gct, bg, pos = _header(payload, max_pixels)
-    frames: list[_Frame] = []
-    total_px = 0
     n = len(payload)
     # pending graphic-control state (applies to the next image only)
     transparent = None
-    disposal = 0
-    delay_cs = 0
     while True:
         if pos >= n:
             raise ValueError("GIF truncated: no trailer")
@@ -288,10 +278,7 @@ def _parse_frames(payload: bytes, max_pixels: int, max_total: int,
             if label == 0xF9:  # graphic control
                 body, pos = _subblocks(payload, pos)
                 if len(body) >= 4:
-                    flags = body[0]
-                    delay_cs = body[1] | (body[2] << 8)
-                    disposal = (flags >> 2) & 0x07
-                    transparent = body[3] if flags & 0x01 else None
+                    transparent = body[3] if body[0] & 0x01 else None
             else:  # comment / application / plain text: skip
                 pos = _skip_subblocks(payload, pos)
             continue
@@ -305,11 +292,6 @@ def _parse_frames(payload: bytes, max_pixels: int, max_total: int,
             if fw * fh > max_pixels:
                 raise ValueError(
                     f"GIF bomb guard: frame {fw}x{fh} exceeds {max_pixels} pixels"
-                )
-            total_px += fw * fh
-            if total_px > max_total:
-                raise ValueError(
-                    f"GIF bomb guard: animation exceeds {max_total} total pixels"
                 )
             pal = gct
             if packed & 0x80:
@@ -326,22 +308,14 @@ def _parse_frames(payload: bytes, max_pixels: int, max_total: int,
             f.interlace = bool(packed & 0x40)
             f.palette = pal
             f.transparent = transparent
-            f.disposal = disposal
-            f.delay_cs = delay_cs
             f.indices = np.frombuffer(
                 _lzw_decode(data, mcs, fw * fh), dtype=np.uint8
             ).reshape(fh, fw)
             if f.interlace:
                 f.indices = _deinterlace(f.indices)
-            frames.append(f)
-            transparent, disposal, delay_cs = None, 0, 0
-            if first_only:
-                break
-            continue
+            return sw, sh, gct, bg, f
         raise ValueError(f"GIF: unknown block type 0x{block:02x}")
-    if not frames:
-        raise ValueError("GIF: no image data")
-    return sw, sh, gct, bg, frames
+    raise ValueError("GIF: no image data")
 
 
 _INTERLACE_PASSES = ((0, 8), (4, 8), (2, 4), (1, 2))
@@ -409,44 +383,10 @@ def decode_gif(payload: bytes, max_pixels: int = MAX_PIXELS) -> np.ndarray:
     RGB — the still-image view of the payload (what ``image_metadata``
     consumes). Off-frame screen area takes the background color;
     transparent pixels keep it."""
-    sw, sh, gct, bg, frames = _parse_frames(
-        payload, max_pixels, MAX_TOTAL_PIXELS, first_only=True
-    )
+    sw, sh, gct, bg, frame = _parse_first_frame(payload, max_pixels)
     canvas = _background(sw, sh, gct, bg)
-    _compose(canvas, frames[0])
+    _compose(canvas, frame)
     return canvas
-
-
-def decode_gif_frames(
-    payload: bytes,
-    max_pixels: int = MAX_PIXELS,
-    max_total_pixels: int = MAX_TOTAL_PIXELS,
-) -> list[np.ndarray]:
-    """Every animation frame as its fully-composed (screen_h, screen_w,
-    3) canvas, honoring disposal methods 0/1 (keep), 2 (restore
-    background over the frame rect), and 3 (restore previous canvas).
-    Bounded by ``max_total_pixels`` summed over frames."""
-    sw, sh, gct, bg, frames = _parse_frames(
-        payload, max_pixels, max_total_pixels, first_only=False
-    )
-    canvas = _background(sw, sh, gct, bg)
-    out: list[np.ndarray] = []
-    for f in frames:
-        before = canvas.copy() if f.disposal == 3 else None
-        _compose(canvas, f)
-        out.append(canvas.copy())
-        if f.disposal == 2:
-            y0, y1 = f.top, min(f.top + f.h, sh)
-            x0, x1 = f.left, min(f.left + f.w, sw)
-            # background is a single color: write it straight into the
-            # frame rect (no per-frame screen-sized canvas allocation)
-            if gct is not None and bg < gct.shape[0]:
-                canvas[y0:y1, x0:x1] = gct[bg]
-            else:
-                canvas[y0:y1, x0:x1] = 0
-        elif f.disposal == 3 and before is not None:
-            canvas = before
-    return out
 
 
 def _background(sw: int, sh: int, gct: np.ndarray | None, bg: int) -> np.ndarray:

@@ -155,14 +155,3 @@ def html_extract(c: Column) -> Column:
         )
 
     return kernel(c)
-
-
-def link_density(c: Column) -> Column:
-    """links per extracted text line — a cheap nav/boilerplate page
-    signal (high density ⇒ menus, not prose); derived from
-    :func:`html_extract` columns, pure Catalyst."""
-    e = html_extract(c)
-    n_lines = F.size(F.split(e["text"], "\n"))
-    return (e["n_links"] / F.greatest(n_lines, F.lit(1))).alias(
-        "link_density"
-    )

@@ -14,7 +14,7 @@ projections.
 
 Operators (north-star extensions per BASELINE.json; no equivalent in
 the reference, which has no string analytics at all):
-  * token / word / char counting (whitespace + BPE-ish regex)
+  * token / word counting (whitespace + BPE-ish regex)
   * quality scoring (length, punctuation, stopword, alpha ratios)
   * Gopher quality + repetition rule sets (Rae 2021 A1.1)
   * C4 page cleaning (Raffel 2020)
@@ -67,10 +67,6 @@ def token_count(c: Column) -> Column:
     """BPE-ish token count — a fast, deterministic proxy for LLM token
     budgeting (letter runs + digits + punctuation marks)."""
     return F.regexp_count(c, F.lit(BPE_TOKEN_RE))
-
-
-def char_count(c: Column) -> Column:
-    return F.length(c)
 
 
 def punct_ratio(c: Column) -> Column:
@@ -194,14 +190,6 @@ def poly_hash(c: Column, base: int = 31, mod: int = (1 << 31) - 1) -> Column:
         F.lit(0).cast("long"),
         lambda acc, ch: (acc * base + F.ascii(ch)) % mod,
     )
-
-
-def rolling_fingerprint(c: Column, base: int = 31, mod: int = (1 << 31) - 1) -> Column:
-    """:func:`poly_hash` of the normalized text — the oracle-checkable
-    document fingerprint (vs :func:`fingerprint`'s engine-specific
-    xxhash64); the rolling structure extends to windowed substring
-    hashing."""
-    return poly_hash(normalize_text(c), base, mod)
 
 
 def word_grams(words: Column, n: int) -> Column:
@@ -350,44 +338,6 @@ def repetition_cols(c: Column) -> dict[str, Column]:
             (F.size(g3) - F.size(F.array_distinct(g3))).cast("double"), F.size(g3)
         ),
     }
-
-
-def sentence_split_catalyst(df, text_col: str, id_col: str):
-    """Sentence segmentation, Catalyst path: split on `.!?` runs +
-    posexplode — whole-stage codegen, the production default.
-    Returns (id, sent_id, sentence)."""
-    sents = F.split(F.col(text_col), r"[.!?]+")
-    return (
-        df.select(F.col(id_col).alias("id"), F.posexplode(sents).alias("sent_id", "s"))
-        .select("id", "sent_id", F.trim(F.col("s")).alias("sentence"))
-        .where(F.col("sentence") != "")
-    )
-
-
-def make_sentence_udtf():
-    """The SAME segmentation as a Python UDTF (Spark 4 table function)
-    — the extension seam for segmenters that outgrow regex (spaCy,
-    pysbd, …): swap the `eval` body, keep the lateral-join plan.
-    Row-at-a-time Python: keep it OFF hot paths; the Catalyst twin is
-    the default and a test pins their equivalence.
-    """
-    from pyspark.sql.functions import udtf
-
-    @udtf(returnType="sent_id int, sentence string")
-    class SentenceSplit:
-        def eval(self, text: str):
-            import re
-
-            if text is None:
-                return
-            out_id = 0
-            for part in re.split(r"[.!?]+", text):
-                part = part.strip()
-                if part:
-                    yield (out_id, part)
-                out_id += 1
-
-    return SentenceSplit
 
 
 def c4_clean(c: Column, min_words_per_line: int = 3, min_sentences: int = 5) -> Column:
@@ -714,8 +664,6 @@ def gopher_quality(
     )
 
 
-
-
 GOPHER_REPETITION_THRESHOLDS = {
     "dup_line_frac": 0.30,
     "dup_para_frac": 0.30,
@@ -851,63 +799,3 @@ def gopher_repetition_profile(
         .select(F.col(id_col), prof.alias("_g"))
         .select(id_col, "_g.*")
     )
-
-
-def compression_signals(
-    df, id_col: str, text_col: str, level: int = 6
-) -> "DataFrame":
-    """Per-document compression-ratio quality signals — the classic
-    "too compressible = boilerplate/repetition, incompressible =
-    random noise" proxy the large-corpus curation recipes use
-    alongside the Gopher rules (e.g. the Dolma pipeline's per-doc
-    zlib ratio filter).
-
-    Returns (id, n_bytes, n_compressed, compression_ratio) with
-    ratio = compressed/raw over the UTF-8 bytes (DEFLATE via stdlib
-    zlib at ``level``; empty text → ratio NULL). One Arrow-batched
-    projection, row-local, zero shuffle; pytest-pinned against direct
-    zlib (DEFLATE output is engine-specific, so this signal is
-    deliberately NOT in the SQL-oracle surface — rows-only class).
-    """
-    import zlib
-    from collections.abc import Iterator as _Iter
-
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    from tableone_pyspark_spark.plans.layout import rebalance
-
-    if not 0 <= level <= 9:
-        raise ValueError(f"zlib level must be in 0..9, got {level}")
-    src = rebalance(
-        df.select(F.col(id_col).alias("id"), F.col(text_col).alias("t"))
-    )
-    schema = T.StructType(
-        [
-            T.StructField("id", src.schema["id"].dataType),
-            T.StructField("n_bytes", T.LongType()),
-            T.StructField("n_compressed", T.LongType()),
-            T.StructField("compression_ratio", T.DoubleType()),
-        ]
-    )
-
-    def kernel(batches: _Iter[pd.DataFrame]) -> _Iter[pd.DataFrame]:
-        for pdf in batches:
-            ids, nb, nc, ratio = [], [], [], []
-            for i, t in zip(pdf["id"], pdf["t"]):
-                raw = (t or "").encode("utf-8")
-                comp = len(zlib.compress(raw, level)) if raw else 0
-                ids.append(i)
-                nb.append(len(raw))
-                nc.append(comp)
-                ratio.append(comp / len(raw) if raw else None)
-            yield pd.DataFrame(
-                {
-                    "id": ids,
-                    "n_bytes": nb,
-                    "n_compressed": nc,
-                    "compression_ratio": ratio,
-                }
-            )
-
-    return src.mapInPandas(kernel, schema)

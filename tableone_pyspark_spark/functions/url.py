@@ -114,23 +114,9 @@ def url_host_py(url: str | None) -> str | None:
     return host.lower() if host else None
 
 
-def url_host(c: Column) -> Column:
-    """Lowercased hostname (NULL for garbage) — ANY scheme (unlike
-    :func:`canonical_url`, which is http/https-only): a generic
-    splitter for logs that carry ftp/mailto rows too. For the
-    consistent web profile use :func:`url_parts`/:func:`host_profile`,
-    which derive the host from the canonical form."""
-
-    @F.pandas_udf("string")
-    def kernel(s: pd.Series) -> pd.Series:
-        return s.map(url_host_py, na_action="ignore")
-
-    return kernel(c)
-
-
 def site_key(c: Column, psl: dict | None = None) -> Column:
     """URL → PSL registrable domain in ONE Arrow kernel (composing
-    ``registrable_domain(url_host(c))`` as two pandas_udfs would pay a
+    ``registrable_domain`` over a host column as two pandas_udfs would pay a
     second full Arrow ser/deser pass over the url column — the
     ``url_parts`` one-kernel rationale). NULL for garbage/hostless.
     ``psl``: a :func:`load_psl` result for the full published list
@@ -148,8 +134,8 @@ def site_key(c: Column, psl: dict | None = None) -> Column:
 
 def url_parts(c: Column) -> Column:
     """Struct(host, canon) from ONE urlsplit per row — the hot-path
-    form (one Arrow crossing, one parse; ``canonical_url`` +
-    ``url_host`` separately would parse every URL twice). ``host`` is
+    form (one Arrow crossing, one parse; ``canonical_url`` and a
+    separate host parse would parse every URL twice). ``host`` is
     the CANONICAL host (http/https only, both NULL for garbage), so
     every profile row counts exactly the URLs that produced a
     canonical key."""

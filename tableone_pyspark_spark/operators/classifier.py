@@ -149,8 +149,8 @@ def train_quality_classifier(
         raise ValueError(f"alpha must be positive, got {alpha}")
     if label_col in ("t", "bucket"):
         # the carried label rides through the feature kernel next to
-        # the internal text/bucket aliases (the tdigest _RESERVED
-        # class; self-review r10)
+        # the internal text/bucket aliases (an internal-alias
+        # collision; self-review r10)
         raise ValueError(
             f"label column name {label_col!r} collides with the "
             "feature kernel's internal schema"

@@ -223,33 +223,6 @@ def duplicate_ngram_fraction(
     )
 
 
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    n: int = 3,
-    k: int = 32,
-    hash_fn: str = "xxhash64",
-) -> DataFrame:
-    """k-permutation MinHash signature per document.
-
-    Default permutations use XOR-rotate double hashing:
-    h_i(s) = h1(s) ⊕ rotl(h2(s), i) over two independent xxhash64
-    seeds — 2 string hashes per shingle instead of k, with collision
-    behavior equivalent to independent permutations for MinHash
-    banding, and pure bit ops (no ANSI overflow).
-    ``hash_fn="poly"`` swaps in the cross-engine affine family over a
-    polynomial string hash (see :func:`_perm_cols`) so signatures are
-    exactly reproducible by a SQL oracle. The signature element is min
-    over shingles — groupBy + k min aggregates, one pass over the
-    exploded shingles. Returns (id, sig array<long>).
-    """
-    sh = _with_base_hash(word_shingles(df, text_col, id_col, n), hash_fn)
-    perms = _perm_cols(hash_fn, k)
-    mins = sh.groupBy("id").agg(*[F.min(p).alias(f"h{i}") for i, p in enumerate(perms)])
-    return mins.select("id", F.array(*[f"h{i}" for i in range(k)]).alias("sig"))
-
-
 def _band_bucket(sig_col: str, bi: int, r: int, hash_fn: str):
     """Bucket id for band ``bi``: xxhash64 of the joined elements
     (default), or a polynomial fold mod POLY_MOD (cross-engine)."""
@@ -506,11 +479,6 @@ def _simhash64_catalyst(
         term = F.shiftleft(bit, i)
         sim = term if sim is None else sim.bitwiseOR(term)
     return votes.select("id", sim.alias("simhash"))
-
-
-def hamming64(a, b):
-    """Hamming distance between two 64-bit signatures (bit_count of XOR)."""
-    return F.bit_count(F.col(a).bitwiseXOR(F.col(b)))
 
 
 def simhash_neardup_pairs(

@@ -647,71 +647,6 @@ def synthesize_gif_corpus(
     return src.mapInPandas(kernel, PNG_CORPUS_SCHEMA)
 
 
-TRANSCODE_SCHEMA = T.StructType(
-    [
-        T.StructField("id", T.LongType()),
-        T.StructField("png", T.BinaryType()),
-        T.StructField("src_format", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-    ]
-)
-
-
-def transcode_images(df: DataFrame, id_col: str, bin_col: str) -> DataFrame:
-    """Normalize a heterogeneous image corpus to ONE format: decode
-    whatever the magic bytes say (PNG / JPEG baseline+progressive /
-    GIF first-frame / BMP / baseline TIFF — all in-repo codecs) and
-    re-encode as PNG.
-    The standard ingestion step before a vision-training pipeline
-    (uniform loader, lossless container, strips animation/metadata).
-
-    Rows whose payload no codec claims are DROPPED with
-    ``src_format`` preserved in the output of the ones kept — filter
-    upstream if unknown formats should fail loudly instead. Arrow
-    batches in, payloads never leave the executor; one narrow pass, no
-    shuffle (plan shape shared with the other image kernels)."""
-    src = df.select(F.col(id_col).alias("id"), F.col(bin_col).alias("payload"))
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        from tableone_pyspark_spark.functions import bmp, gif, jpeg, png, tiff
-
-        def decode(raw: bytes):
-            if png.is_png(raw):
-                return "png", png.decode_png(raw)
-            if jpeg.is_jpeg(raw):
-                return "jpeg", jpeg.decode_jpeg(raw)
-            if gif.is_gif(raw):
-                return "gif", gif.decode_gif(raw)
-            if bmp.is_bmp(raw):
-                return "bmp", bmp.decode_bmp(raw)
-            if tiff.is_tiff(raw):
-                return "tiff", tiff.decode_tiff(raw)
-            return None, None
-
-        for pdf in batches:
-            rows = []
-            for i, payload in zip(pdf["id"], pdf["payload"]):
-                fmt, arr = decode(bytes(payload))
-                if arr is None:
-                    continue
-                if arr.dtype == np.uint16:  # 16-bit PNG: high byte
-                    arr = (arr >> 8).astype(np.uint8)
-                if arr.ndim == 2:
-                    arr = arr[:, :, None]
-                if arr.shape[2] == 4:  # drop alpha for the uniform store
-                    arr = arr[:, :, :3]
-                out = png.encode_png(np.ascontiguousarray(arr))
-                rows.append((int(i), out, fmt, arr.shape[1], arr.shape[0]))
-            yield pd.DataFrame(
-                rows, columns=["id", "png", "src_format", "width", "height"]
-            )
-
-    return src.mapInPandas(kernel, TRANSCODE_SCHEMA)
-
-
 def phash_neardup_pairs(
     df: DataFrame, id_col: str, bin_col: str, max_hamming: int = 3
 ) -> DataFrame:

@@ -36,8 +36,7 @@ with each component's sign fixed by "largest-|entry| coordinate is
 positive", so the model is exactly re-trainable by an oracle.
 
 No counterpart in the reference repo (533-line tableone engine);
-extends the embedding family (similarity / ml_lsh / pq / opq /
-tdigest artifacts).
+extends the embedding family (similarity / ml_lsh / pq / opq).
 """
 
 from __future__ import annotations

@@ -529,20 +529,6 @@ def _rotated(vectors: DataFrame, rotation: np.ndarray, id_col: str, vec_col: str
     return src.mapInPandas(kernel, schema)
 
 
-def opq_encode(
-    vectors: DataFrame,
-    rotation: np.ndarray,
-    codebook: PQCodebook,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """:func:`pq_encode` in the learned rotated space — same output
-    contract (id, codes, recon_err); recon_err is measured in the
-    rotated space, which equals the original-space quantization error
-    of the rotated-back reconstruction (R is orthogonal)."""
-    return pq_encode(_rotated(vectors, rotation, id_col, vec_col), codebook, id_col, vec_col)
-
-
 def opq_topk(
     vectors: DataFrame,
     rotation: np.ndarray,

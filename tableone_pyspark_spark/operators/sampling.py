@@ -30,7 +30,7 @@ def _poly_hash(s: Column, base: int = 31, mod: int = MOD) -> Column:
 
 
 def split_bucket(key: Column, salt: str = "split-v1") -> Column:
-    """Stable bucket in [0, BUCKETS) for a key — the unit both
+    """Stable bucket in [0, BUCKETS) for a key — the unit the
     operators share. Salting decorrelates independent splits drawn
     from the same key space.
 
@@ -65,16 +65,6 @@ def hash_split(
             F.lit("train")
         ),
     )
-
-
-def deterministic_sample(
-    df: DataFrame, key_col: str, fraction: float, salt: str = "sample-v1"
-) -> DataFrame:
-    """Keep ~``fraction`` of rows, chosen by hashed key — the
-    reproducible alternative to ``df.sample`` (which is partitioning-
-    dependent). Filter is a scan-level predicate: no shuffle."""
-    cut = int(BUCKETS * fraction)
-    return df.where(split_bucket(F.col(key_col), salt) < cut)
 
 
 def quota_sample(

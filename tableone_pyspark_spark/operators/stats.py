@@ -52,7 +52,7 @@ def pivoted_counts(
     return pivot.agg(F.count(F.lit(1))).na.fill(0)
 
 
-#: melted continuous stats: (label, agg builder) — reference :325-434
+#: continuous stats: (label, agg builder) — reference :325-434
 def _stat_exprs(col: str, quantile_mode: str) -> list[tuple[str, Column]]:
     c = F.col(col)
     if quantile_mode == "interpolated":
@@ -69,17 +69,6 @@ def _stat_exprs(col: str, quantile_mode: str) -> list[tuple[str, Column]]:
         ("q50", q[1].cast("double")),
         ("q75", q[2].cast("double")),
     ]
-
-
-def continuous_stats_melted(
-    df: DataFrame, col: str, quantile_mode: str = "interpolated"
-) -> DataFrame:
-    """The 8-stat block as (stat, value) rows — ONE aggregation melted
-    with ``stack`` (vs. the reference's 8 jobs + 8 joins, :325-437)."""
-    labeled = [(name, expr.alias(f"s_{name}")) for name, expr in _stat_exprs(col, quantile_mode)]
-    agg = df.agg(*[e for _, e in labeled])
-    pairs = ", ".join(f"'{name}', s_{name}" for name, _ in labeled)
-    return agg.select(F.expr(f"stack({len(labeled)}, {pairs}) as (stat, value)"))
 
 
 def continuous_stats_by_group(
@@ -504,13 +493,6 @@ def correlation_matrix(df: DataFrame, cols: list[str]) -> DataFrame:
     )
 
 
-#: evidence hook: when set to a callable, exact_percentiles_dist passes
-#: it the final rank-extraction frame right before collecting it, so
-#: scripts/ can dump the distributed plan (the eager fit never appears
-#: in the returned query's explain). No effect when None (production).
-_RANK_PLAN_HOOK = None
-
-
 def exact_percentiles_dist(
     df: DataFrame, col: str, probs: list[float], buckets: int = 256
 ) -> list[float] | None:
@@ -620,10 +602,7 @@ def exact_percentiles_dist(
         F.min(F.when(cum >= F.lit(k), F.col("__x"))).alias(f"__k_{k}")
         for k in sorted(ks)
     ]
-    final = ranked.agg(*aggs)
-    if _RANK_PLAN_HOOK is not None:
-        _RANK_PLAN_HOOK(final)
-    row = final.collect()[0]
+    row = ranked.agg(*aggs).collect()[0]
 
     out: list[float] = []
     for pos, lo_k, hi_k in pos_lh:

@@ -9,9 +9,10 @@ adds a round-robin shuffle when the scan is narrower than the
 available parallelism, where the shuffle of a few skinny rows is
 orders of magnitude cheaper than the serialized compute it unblocks.
 
-`release_checkpoint` is the shared storage-bookkeeping half of the
-iterative-loop discipline (BPE training, PageRank): localCheckpoint
-truncates lineage, this frees the superseded round's blocks.
+`release_checkpoint` is the storage-bookkeeping half of the
+localCheckpoint discipline (a fitted DSIR model, any iterative loop):
+localCheckpoint truncates lineage, this frees a superseded frame's
+blocks.
 """
 
 from __future__ import annotations

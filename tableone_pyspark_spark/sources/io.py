@@ -447,96 +447,3 @@ def write_zordered(
         .format("parquet")
         .save(path)
     )
-
-
-def write_bloom_filtered(
-    df: DataFrame,
-    path: str,
-    bloom_cols: list[str],
-    fpp: float = 0.01,
-    ndv: int | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Write parquet with per-column split-block Bloom filters in the
-    file footers (`parquet.bloom.filter.enabled#col` writer options —
-    parquet-mr's native feature, no Spark-side state). At read time
-    any engine that understands the footer (Spark, Trino, Impala, …)
-    skips whole row groups for point/IN predicates on these columns —
-    the complement of Z-ordering: min/max stats prune RANGE filters,
-    Bloom filters prune EQUALITY on high-cardinality columns where
-    every row group's [min, max] would otherwise straddle the probe
-    value. The write-side cost is one filter per (row group × column),
-    sized from ``fpp`` and ``ndv`` (expected distinct values per row
-    group; parquet-mr defaults apply when None).
-
-    parquet-mr semantics worth knowing (verified against this
-    container's writer): a chunk that stays FULLY dictionary-encoded
-    drops its Bloom filter — correct by design, the dictionary is
-    already an exact membership structure the reader prunes with. So
-    the filters appear exactly where they help: high-cardinality
-    columns whose values overflow the dictionary (ids, urls, hashes).
-
-    The batch/crawl-dedup Bloom artifact (`operators/bloom.py`) solves
-    a different problem (cross-corpus membership); this one lives in
-    the STORAGE layout.
-    """
-    if not bloom_cols:
-        raise ValueError("bloom_cols must name at least one column")
-    if not 0.0 < fpp < 1.0:
-        raise ValueError(f"fpp must be in (0, 1), got {fpp}")
-    w = df.write.mode(mode).format("parquet")
-    for c in bloom_cols:
-        w = w.option(f"parquet.bloom.filter.enabled#{c}", "true")
-        w = w.option(f"parquet.bloom.filter.fpp#{c}", str(fpp))
-        if ndv is not None:
-            w = w.option(f"parquet.bloom.filter.expected.ndv#{c}", str(ndv))
-    w.save(path)
-
-
-def parquet_bloom_offsets(spark, path: str, cols: list[str]) -> list[dict]:
-    """Footer inspection twin of :func:`parquet_column_ranges`: for
-    every (file, row group) report whether each column carries a Bloom
-    filter. Read through parquet-mr via py4j — the exact library that
-    wrote the footers (this container's pyarrow/duckdb builds don't
-    surface ``bloom_filter_offset``); ``getBloomFilterOffset()`` is
-    ≥ 0 iff a filter was written. The assertion hook tests/pipelines
-    use to prove the layout feature is actually ON — a silently-
-    missing filter would otherwise just read slower forever."""
-    from pathlib import Path as _Path
-
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    out = []
-    files = sorted(_Path(path).glob("*.parquet"))
-    if not files:
-        # a typo'd/non-local/nested path would otherwise return [] —
-        # which an assertion hook could misread as "no filters written"
-        raise ValueError(f"parquet_bloom_offsets: no *.parquet files in {path!r}")
-    for f in files:
-        jpath = jvm.org.apache.hadoop.fs.Path(str(f))
-        infile = jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            jpath, conf
-        )
-        reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(infile)
-        try:
-            blocks = reader.getFooter().getBlocks()
-            for rg in range(blocks.size()):
-                row = {"file": f.name, "row_group": rg}
-                chunks = blocks.get(rg).getColumns()
-                by_name = {}
-                for ci in range(chunks.size()):
-                    ch = chunks.get(ci)
-                    by_name[ch.getPath().toDotString()] = (
-                        ch.getBloomFilterOffset() >= 0
-                    )
-                for c in cols:
-                    if c not in by_name:
-                        raise ValueError(
-                            f"parquet_bloom_offsets: column {c!r} not in "
-                            f"{f.name} footer (have: {sorted(by_name)})"
-                        )
-                    row[c] = by_name[c]
-                out.append(row)
-        finally:
-            reader.close()
-    return out

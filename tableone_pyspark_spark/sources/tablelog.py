@@ -76,6 +76,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from tableone_pyspark_spark.core.trace import carry_job_context
 from tableone_pyspark_spark.sources.log_delta import version_delta
 
 _log = logging.getLogger(__name__)
@@ -2451,16 +2452,18 @@ def merge_rows(
     # immutable base version: schedule them concurrently (guide §2.6
     # overlap; the sufficient-stats pool precedent) so each job's
     # scheduling tail back-fills the others instead of serializing
-    # three target-side scans end to end.
+    # three target-side scans end to end. The writers carry the caller's
+    # job group, description and tags.
     from concurrent.futures import ThreadPoolExecutor
 
+    carry = carry_job_context(spark)
     post_files: list[str] = []
     ins_files: list[str] = []
     n_post = n_insd = 0
     with ThreadPoolExecutor(max_workers=3) as _pool:
         f_dv = (
             _pool.submit(
-                _write_deletion_vector, spark, table, doc,
+                carry(_write_deletion_vector), spark, table, doc,
                 lambda live: live.join(src_keys, keys, "left_semi"),
             )
             if doc["files"]
@@ -2468,7 +2471,7 @@ def merge_rows(
         )
         f_post = (
             _pool.submit(
-                _write_side,
+                carry(_write_side),
                 source.join(live_keys, keys, "inner").select(
                     *source.columns
                 ),
@@ -2478,7 +2481,7 @@ def merge_rows(
         )
         f_ins = (
             _pool.submit(
-                _write_side,
+                carry(_write_side),
                 source.join(live_keys.distinct(), keys, "left_anti"),
             )
             if when_not_matched == "insert"
@@ -2919,7 +2922,7 @@ def clone(
 #: Hadoop loop — at 100 TB a compaction-churned table reclaims
 #: millions of files per vacuum, and one driver RPC per file is
 #: hours on an object store (10-100 ms per DELETE). Measured on
-#: LOCAL fs (scale_check_r15b): 1500 deletes = 1.9 s driver-serial
+#: LOCAL fs (r15 probe): 1500 deletes = 1.9 s driver-serial
 #: vs 5.8 s as a job — local unlink is ~1 ms, so the local crossover
 #: sits near ~10k files; object-store round-trips cross over far
 #: earlier. The default is sized for the local measurement (the
@@ -3931,7 +3934,7 @@ def last_committed_batch(
     # the checkpoint is consulted LAZILY only on a tail miss (the
     # sidecar-less cold start), where its watermark map answers in one
     # read instead of a walk to the log root (X139; the eager variant
-    # measurably REGRESSED the hot path in scale_check_r13)
+    # measurably REGRESSED the hot path in the r13 1,000-version probe)
     ck = max((n for n in cks if n <= cur), default=None)
     hi_floor = floor_version if ck is None else max(floor_version, ck)
     for v in range(cur, hi_floor, -1):

@@ -939,97 +939,3 @@ def streaming_drift(
         F.round(psi, 6).alias("psi"),
     )
 
-
-def streaming_quantiles(
-    stream: DataFrame,
-    value_col: str,
-    group_col: str,
-    qs: list[float] | None = None,
-    ts_col: str = "ts",
-    delta: int = 100,
-    watermark: str = "0 seconds",
-) -> DataFrame:
-    """Per-group running quantile tracking in O(δ) state — the
-    QUANTILE member of the streaming-sketch family (Bloom novelty /
-    CMS frequency / heavy hitters), backed by the X114 t-digest: each
-    micro-batch folds its values into the group's digest
-    (``operators/tdigest._td_merge`` — the ONE merge implementation
-    batch and stream share) and emits one (group, q, value, total)
-    snapshot row per requested quantile — "p99 latency / doc length /
-    score so far", forever, without keeping the values.
-
-    State per group: two O(δ) double arrays — fixed by construction,
-    so NoTimeout is safe for the state SIZE; unlike the hash-sharded
-    sketches the state COUNT here is one per group value, so the group
-    column must be a bounded monitoring dimension (source, shard,
-    endpoint), not an unbounded id — documented contract, same as any
-    keyed dashboard.
-
-    Replay contract: within a micro-batch values fold in sorted
-    (event-time, value) order, and the kernel IS the batch-family
-    python reference, so under availableNow with one file per trigger
-    every emitted snapshot is bitwise-reproducible by folding the
-    batch multisets through ``_td_merge`` in order —
-    pytest-differential class, exact equality."""
-    import numpy as np
-    import pandas as pd
-
-    from tableone_pyspark_spark.operators.tdigest import (
-        _td_merge,
-        _td_quantile,
-    )
-
-    qs = [0.5, 0.99] if qs is None else list(qs)
-    if not qs or any(not 0.0 <= q <= 1.0 for q in qs):
-        raise ValueError(f"qs must be fractions in [0, 1], got {qs}")
-    if delta < 10:
-        raise ValueError(f"delta must be >= 10, got {delta}")
-    out_schema = "group string, q double, value double, total double"
-    state_schema = "means array<double>, weights array<double>"
-
-    def fold(group_key, pdfs, state):
-        if state.hasTimedOut:  # NoTimeout: unreachable, defensive
-            return
-        if state.exists:
-            m = np.asarray(state.get[0], dtype=np.float64)
-            w = np.asarray(state.get[1], dtype=np.float64)
-        else:
-            m = np.array([], dtype=np.float64)
-            w = np.array([], dtype=np.float64)
-        frames = [pdf[["__ts_us", "__v"]] for pdf in pdfs]
-        if not frames:
-            return
-        batch = pd.concat(frames, ignore_index=True).sort_values(
-            ["__ts_us", "__v"], kind="stable"
-        )
-        v = batch["__v"].to_numpy(dtype=np.float64)
-        if len(v):
-            m = np.concatenate([m, v])
-            w = np.concatenate([w, np.ones_like(v)])
-            m, w = _td_merge(m, w, delta)
-        # .tolist() (not list()): the state pickler rejects numpy
-        # scalar elements
-        state.update((m.tolist(), w.tolist()))
-        if len(m):
-            total = float(w.sum())
-            yield pd.DataFrame(
-                [(group_key[0], q, _td_quantile(m, w, q), total) for q in qs],
-                columns=["group", "q", "value", "total"],
-            )
-
-    return _state_apply(
-        stream, ts_col, watermark, "group",
-        [
-            F.col(group_col).cast("string").alias("group"),
-            F.unix_micros(F.col(ts_col)).alias("__ts_us"),
-            F.col(value_col).cast("double").alias("__v"),
-        ],
-        # NaN passes isNotNull (Spark treats it as a value) but would
-        # poison the digest's weighted means forever — the batch twin
-        # drops it via pandas notna, so the stream must too
-        # (self-review r10; the streaming_drift precedent)
-        F.col("group").isNotNull()
-        & F.col("__v").isNotNull()
-        & ~F.isnan(F.col("__v")),
-        fold, out_schema, state_schema,
-    )

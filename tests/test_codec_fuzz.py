@@ -150,13 +150,13 @@ def test_web_ingest_kernels_mutation_contract():
     """Same discipline for the crawl-facing kernels (real crawls ARE
     hostile input): mutated WARC bytes raise only ValueError (archive
     corruption) or parse with degraded records (web garbage); the
-    html/url/robots string kernels NEVER raise on garbage — they
+    html/url string kernels NEVER raise on garbage — they
     degrade (NULL/empty verdicts). 150 seeded mutations per kernel;
     the exploratory 2,000-input sweep found zero violations (r11)."""
     import gzip
     import random
 
-    from tableone_pyspark_spark.functions import html, robots, url, warc
+    from tableone_pyspark_spark.functions import html, url, warc
 
     plain = warc.encode_warc(
         [
@@ -185,12 +185,6 @@ def test_web_ingest_kernels_mutation_contract():
         (
             "https://user:p@a.B.example.com:8080/p/../q?b=2&a=1#frag",
             url.canonical_url_py,
-            (),
-        ),
-        (
-            "User-agent: *\nDisallow: /private\nAllow: /private/ok\n"
-            "User-agent: bot\nDisallow: /\n",
-            robots.parse_robots_py,
             (),
         ),
     ]

@@ -140,3 +140,51 @@ def test_strat_cardinality_limit(spark):
         df.where("id < 3"), col_to_strat="g", cols_to_analyze=["x"], config=cfg
     )
     assert ["0", "1", "2"] == [c for c in out.columns if c in {"0", "1", "2", "3"}]
+
+
+def test_cat_cells_limit_raises_past_the_limit(spark):
+    """Categorical (value × strat) cells past ``cat_cells_limit`` fail
+    fast instead of filling the driver; exactly ``limit`` cells pass."""
+    from tableone_pyspark_spark import TableOneConfig
+
+    df = spark.createDataFrame(
+        [("a", "x"), ("a", "y"), ("b", "x")], "g string, c string"
+    )
+    # three (value, strat) cells: (x, a), (y, a), (x, b)
+    with pytest.raises(ValueError, match="more than 2 .* cells"):
+        tableone(df, col_to_strat="g", cols_to_analyze=["c"],
+                 config=TableOneConfig(cat_cells_limit=2))
+    out = tableone(df, col_to_strat="g", cols_to_analyze=["c"],
+                   config=TableOneConfig(cat_cells_limit=3))
+    assert out.count() == 3  # total row and two categories
+
+
+def test_lowcard_disc_windowed_fallback_matches_driver_path(spark):
+    """A low-cardinality distinct-cell frame past ``cat_cells_limit``
+    takes the distributed window fallback instead of the driver-side
+    rank selection; both return the same quartile cells, bit for bit,
+    with NULL and NaN in the column (NaN sorts last in both)."""
+    import struct
+
+    from tableone_pyspark_spark import TableOneConfig
+
+    nan = float("nan")
+    vals = [1.0, 2.0, 2.0, 3.0, None, nan, 5.0, 2.5, nan, 1.0, 4.0, None]
+    df = spark.createDataFrame(
+        [("ab"[i % 2], v) for i, v in enumerate(vals)], "g string, x double"
+    )
+
+    def cells(limit):
+        cfg = TableOneConfig(cat_cells_limit=limit)
+        out = tableone(df, col_to_strat="g", cols_to_analyze=["x"], config=cfg)
+        return [
+            tuple(
+                struct.pack("<d", v) if isinstance(v, float) else v
+                for v in r
+            )
+            for r in out.orderBy("Index").collect()
+        ]
+
+    windowed, driver = cells(1), cells(1_000_000)
+    assert windowed == driver
+    assert len(driver) == 9  # total row and the eight stat rows

@@ -618,3 +618,41 @@ def test_call_runs_with_pinned_threads_off():
     )
     assert done.returncode == 0, done.stderr[-3000:]
     assert done.stdout.split()[-1] == "11"  # total, 2 categories, 8 stats
+
+
+def test_cli_output_equals_in_process_result(spark, patients, tmp_path):
+    """``python -m tableone_pyspark_spark`` writes the same table the
+    API returns. It runs in a subprocess: ``main()`` stops the session
+    it gets, which in-process would be the shared test session."""
+    import struct
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    src, dst = str(tmp_path / "in.parquet"), str(tmp_path / "out.parquet")
+    patients.write.parquet(src)
+    done = subprocess.run(
+        [sys.executable, "-m", "tableone_pyspark_spark", src,
+         "--cols", "name,region,age,number_of_claims", "--strat", "plan",
+         "--p-values", "--output", dst, "--master", "local[2]"],
+        cwd=Path(__file__).resolve().parents[1],
+        capture_output=True, text=True, timeout=600,
+    )
+    assert done.returncode == 0, done.stderr[-3000:]
+
+    def cells(df):
+        # bit-for-bit: NaN equals NaN, -0.0 differs from 0.0
+        return [
+            tuple(struct.pack("<d", v) if isinstance(v, float) else v for v in r)
+            for r in df.orderBy("Index", "Values").collect()
+        ]
+
+    want = tableone(
+        spark.read.parquet(src), col_to_strat="plan",
+        cols_to_analyze=["name", "region", "age", "number_of_claims"],
+        p_values=True,
+    )
+    got = spark.read.parquet(dst)
+    assert got.columns == want.columns
+    assert cells(got) == cells(want)
+    assert len(cells(want)) > 10

@@ -915,109 +915,3 @@ def test_streaming_heavy_hitters_cms_candidates(spark, tmp_path):
     with _pytest.raises(ValueError, match="phi"):
         streaming_heavy_hitters(stream, "key", phi=1.5)
 
-
-def test_streaming_quantiles_tdigest_state(spark, tmp_path):
-    """Streaming per-group quantile tracking (X117): two micro-batches
-    fold into per-group t-digest state; every (group, q, value, total)
-    snapshot matches a bitwise pure-Python replay through the SHARED
-    _td_merge/_td_quantile reference (the kernel IS the batch-family
-    fold), totals accumulate across batches, and NULL values/groups
-    are dropped."""
-    import numpy as _np
-
-    from pyspark.sql import functions as F
-
-    from tableone_pyspark_spark.operators.tdigest import (
-        _td_merge,
-        _td_quantile,
-    )
-    from tableone_pyspark_spark.streaming.stream_stats import (
-        streaming_quantiles,
-    )
-
-    rng = _np.random.default_rng(41)
-    t0 = 1_700_000_000
-    rows1 = [("a", float(v), i) for i, v in enumerate(rng.normal(10, 2, 300))]
-    rows1 += [("b", float(v), i) for i, v in enumerate(rng.uniform(0, 1, 200))]
-    # dropped: NULL value, NULL group, and NaN (NaN passes isNotNull
-    # and would poison the digest means forever — self-review r10)
-    rows1 += [("a", None, 999), (None, 5.0, 998), ("a", float("nan"), 997)]
-    rows2 = [("a", float(v), i) for i, v in enumerate(rng.normal(50, 5, 300))]
-    d1 = spark.createDataFrame(
-        rows1, "g string, v double, off long"
-    ).select("g", "v", F.timestamp_seconds(F.lit(t0) + F.col("off")).alias("ts"))
-    d2 = spark.createDataFrame(
-        rows2, "g string, v double, off long"
-    ).select("g", "v", F.timestamp_seconds(F.lit(t0 + 10_000) + F.col("off")).alias("ts"))
-    p = str(tmp_path / "qstream")
-    d1.coalesce(1).write.mode("overwrite").parquet(p)
-    d2.coalesce(1).write.mode("append").parquet(p)
-
-    stream = (
-        spark.readStream.schema("g string, v double, ts timestamp")
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(p)
-    )
-    out = streaming_quantiles(stream, "v", "g", qs=[0.5, 0.99], delta=50)
-    assert out.isStreaming
-    qry = (
-        out.writeStream.format("memory")
-        .queryName("t_q_stream")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    qry.awaitTermination()
-    got = spark.table("t_q_stream").collect()
-    # group a snapshots twice (both batches), b once; 2 qs each
-    assert len(got) == 3 * 2
-
-    # bitwise python replay: fold each batch's (ts, value)-sorted
-    # values through the shared reference
-    def batch_vals(rows, g):
-        vs = [
-            (off, v)
-            for gg, v, off in rows
-            if gg == g and v is not None and v == v  # drop None AND NaN
-        ]
-        return _np.array([v for _, v in sorted(vs)], dtype=_np.float64)
-
-    state = {}
-    want = {}
-    for bi, rows in enumerate((rows1, rows2)):
-        for g in ("a", "b"):
-            v = batch_vals(rows, g)
-            if not len(v):
-                continue
-            m, w = state.get(g, (_np.array([]), _np.array([])))
-            m = _np.concatenate([m, v])
-            w = _np.concatenate([w, _np.ones_like(v)])
-            m, w = _td_merge(m, w, 50)
-            state[g] = (m, w)
-            for q in (0.5, 0.99):
-                want[(g, bi, q)] = (_td_quantile(m, w, q), float(w.sum()))
-
-    by_key = {}
-    for r in got:
-        # batch index recovered from the total (totals strictly grow)
-        by_key.setdefault((r["group"], r["q"]), []).append(
-            (r["total"], r["value"])
-        )
-    for (g, q), snaps in by_key.items():
-        snaps.sort()  # totals strictly grow → batch order
-        for bi, (total, value) in enumerate(snaps):
-            wv, wt = want[(g, bi, q)]
-            assert value == wv, (g, q, bi)
-            assert total == wt, (g, q, bi)
-    # group a totals: 300 then 600; b: 200 once
-    a_tot = sorted(t for (g, q), s in by_key.items() if g == "a" for t, _ in s if q == 0.5)
-    assert a_tot == [300.0, 600.0]
-
-    # validation
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="fractions"):
-        streaming_quantiles(stream, "v", "g", qs=[2.0])
-    with _pytest.raises(ValueError, match="delta"):
-        streaming_quantiles(stream, "v", "g", delta=1)

@@ -144,50 +144,6 @@ def test_zorder_bits_guard_auto_shrinks(spark):
         zorder_value(li, [], bits=8)
 
 
-def test_write_bloom_filtered_footers(spark, tmp_path):
-    """Bloom-filter writer options land in the parquet footers for the
-    requested columns only, and the files read back identically."""
-    import pytest as _pytest
-
-    from tableone_pyspark_spark.sources.io import (
-        parquet_bloom_offsets,
-        write_bloom_filtered,
-    )
-
-    # high-cardinality key: unique values overflow the dictionary, so
-    # parquet-mr actually materializes the filter (a fully-dictionary-
-    # encoded chunk drops it by design — the dictionary already prunes)
-    df = spark.range(0, 50000).selectExpr(
-        "id", "concat('k', md5(cast(id as string))) AS key", "id * 2 AS v"
-    )
-    path = str(tmp_path / "bloomed")
-    write_bloom_filtered(df, path, ["key"], fpp=0.01, ndv=50000)
-    rows = parquet_bloom_offsets(spark, path, ["key", "v"])
-    assert rows, "no parquet files written"
-    assert all(r["key"] for r in rows), "bloom filter missing on 'key'"
-    assert not any(r["v"] for r in rows), "unrequested column got a filter"
-    back = spark.read.parquet(path)
-    assert back.count() == 50000
-    probe = df.where("id = 123").select("key").collect()[0]["key"]
-    assert back.where(back["key"] == probe).count() == 1
-    # low-cardinality twin: dictionary-encoded chunk -> no filter, by
-    # the documented parquet-mr design
-    low = spark.range(0, 5000).selectExpr("cast(id % 7 as string) AS key")
-    lp = str(tmp_path / "lowcard")
-    write_bloom_filtered(low, lp, ["key"])
-    assert not any(r["key"] for r in parquet_bloom_offsets(spark, lp, ["key"]))
-    with _pytest.raises(ValueError, match="at least one"):
-        write_bloom_filtered(df, path, [])
-    with _pytest.raises(ValueError, match="fpp"):
-        write_bloom_filtered(df, path, ["key"], fpp=1.5)
-    # ADVICE r8: a typo'd column and an empty/nonexistent path must be
-    # typed errors, not a bare KeyError / silent empty result
-    with _pytest.raises(ValueError, match="'nope' not in"):
-        parquet_bloom_offsets(spark, lp, ["nope"])
-    with _pytest.raises(ValueError, match="no \\*.parquet files"):
-        parquet_bloom_offsets(spark, str(tmp_path / "missing"), ["key"])
-
-
 def test_zorder_string_and_date_columns(spark, tmp_path):
     """r15 — zorder_by on non-numeric columns (the Delta/Iceberg
     surface): strings ride an order-preserving 6-byte-prefix

@@ -355,36 +355,6 @@ def test_bmp_decode_branches_32bit_palette_topdown():
     assert not bmp.is_bmp(b"BMW motorcycles are " + b"x" * 100)
 
 
-def test_transcode_images_normalizes_all_formats(spark):
-    """decode-any -> PNG: every in-repo codec's payload lands as a PNG
-    of the SAME pixels; unknown payloads drop."""
-    import numpy as np
-
-    from tableone_pyspark_spark.functions import bmp, gif, png
-    from tableone_pyspark_spark.operators.multimodal import transcode_images
-
-    rng = np.random.default_rng(9)
-    arr = rng.integers(0, 256, (8, 6, 3), dtype=np.uint8)
-    gray_pal = np.repeat(np.arange(256, dtype=np.uint8)[:, None], 3, axis=1)
-    idx = rng.integers(0, 256, (8, 6), dtype=np.uint8)
-    rows = [
-        (1, bytearray(png.encode_png(arr))),
-        (2, bytearray(bmp.encode_bmp(arr))),
-        (3, bytearray(gif.encode_gif(idx, gray_pal))),
-        (4, bytearray(b"not an image at all")),
-    ]
-    df = spark.createDataFrame(rows, "id long, payload binary")
-    got = {r["id"]: r for r in transcode_images(df, "id", "payload").collect()}
-    assert set(got) == {1, 2, 3}  # unknown payload dropped
-    assert got[1]["src_format"] == "png"
-    assert got[2]["src_format"] == "bmp"
-    assert got[3]["src_format"] == "gif"
-    assert np.array_equal(png.decode_png(bytes(got[2]["png"])), arr)
-    gif_rgb = gray_pal[idx]
-    assert np.array_equal(png.decode_png(bytes(got[3]["png"])), gif_rgb)
-    assert (got[2]["width"], got[2]["height"]) == (6, 8)
-
-
 def test_bmp_sub_byte_and_16bit_depths():
     import struct
 
@@ -704,21 +674,6 @@ def test_tiff_hostile_ifd_entries_raise_valueerror():
     # RowsPerStrip with a non-integer type hits the same contract
     with _pytest.raises(ValueError, match="non-integer"):
         tiff.decode_tiff(_patch(278, 2, 1, 4))
-
-
-def test_transcode_accepts_tiff(spark):
-    import numpy as np
-
-    from tableone_pyspark_spark.functions import png, tiff
-    from tableone_pyspark_spark.operators.multimodal import transcode_images
-
-    rgb = np.random.default_rng(3).integers(0, 256, (4, 5, 3), dtype=np.uint8)
-    d = spark.createDataFrame(
-        [(1, bytearray(tiff.encode_tiff(rgb)))], "id long, b binary"
-    )
-    r = transcode_images(d, "id", "b").collect()[0]
-    assert r["src_format"] == "tiff"
-    assert np.array_equal(png.decode_png(bytes(r["png"])), rgb)
 
 
 def test_tiff_packbits():

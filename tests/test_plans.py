@@ -708,18 +708,79 @@ def test_cms_build_partial_aggregates_before_exchange(spark):
     assert "BroadcastNestedLoopJoin" in eexe or "BroadcastExchange" in eexe
 
 
-def test_continuous_stats_melted_matches_by_group_at_zero_keys(spark, lineitem):
-    """continuous_stats_melted (its graded row was deleted r10 as the
-    zero-key case of continuous_stats_by_group) pinned directly: the
-    melted (stat, value) rows must equal the single-group wide row of
-    the grouped twin on a constant stratum."""
-    melted = {
-        r["stat"]: r["value"]
-        for r in ops.continuous_stats_melted(lineitem, "l_quantity").collect()
-    }
-    wide = ops.continuous_stats_by_group(
-        lineitem.withColumn("one", F.lit("g")), "l_quantity", "one"
-    ).collect()[0]
-    assert set(melted) == {"n", "min", "max", "mean", "stddev", "q25", "q50", "q75"}
-    for stat in melted:
-        assert abs(melted[stat] - float(wide[stat])) < 1e-9, stat
+
+def test_every_package_module_is_reachable():
+    """Every module under ``tableone_pyspark_spark/`` is imported,
+    directly or transitively, from the public package ``__init__`` or
+    from ``__spark_entry__.py`` (the declared queries). Imports inside a
+    top-level function or class count when something outside it names
+    it: a dead function does not keep the modules it imports alive. AST
+    only: nothing is imported or run, and no Spark session starts. The
+    named exceptions: ``__main__`` (the CLI entry point in
+    ``pyproject.toml``) and ``plans/inspect.py`` (plan assertions for
+    tests)."""
+    import ast
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parents[1]
+    pkg = "tableone_pyspark_spark"
+    paths = {"__spark_entry__": root / "__spark_entry__.py"}
+    for p in (root / pkg).rglob("*.py"):
+        parts = p.relative_to(root).with_suffix("").parts
+        paths[".".join(parts[:-1] if parts[-1] == "__init__" else parts)] = p
+    trees = {m: ast.parse(p.read_text()) for m, p in paths.items()}
+
+    # top-level statements (by identity) that name each identifier
+    named_by: dict[str, set[int]] = {}
+    for tree in trees.values():
+        for stmt in tree.body:
+            for node in ast.walk(stmt):
+                if isinstance(node, ast.Name):
+                    ident = node.id
+                elif isinstance(node, ast.Attribute):
+                    ident = node.attr
+                elif isinstance(node, ast.alias):
+                    ident = node.name.rsplit(".", 1)[-1]
+                else:
+                    continue
+                named_by.setdefault(ident, set()).add(id(stmt))
+
+    def imported(name: str) -> set[str]:
+        # the package a relative import resolves against
+        here = name.split(".")
+        if paths[name].name != "__init__.py":
+            here = here[:-1]
+        out = set()
+        for stmt in trees[name].body:
+            if isinstance(
+                stmt, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            ) and not named_by.get(stmt.name, set()) - {id(stmt)}:
+                continue  # nothing else names this function or class
+            for node in ast.walk(stmt):
+                if isinstance(node, ast.Import):
+                    targets = [a.name for a in node.names]
+                elif isinstance(node, ast.ImportFrom):
+                    base = here[: len(here) - node.level + 1] if node.level else []
+                    mod = ".".join(base + ([node.module] if node.module else []))
+                    targets = [mod] + [f"{mod}.{a.name}" for a in node.names]
+                else:
+                    continue
+                for t in targets:
+                    parts = t.split(".")
+                    # importing a.b.c also runs a/__init__ and a/b/__init__
+                    out.update(
+                        ".".join(parts[:i])
+                        for i in range(1, len(parts) + 1)
+                        if ".".join(parts[:i]) in paths
+                    )
+        return out
+
+    seen = set()
+    todo = [pkg, "__spark_entry__"]
+    while todo:
+        name = todo.pop()
+        if name not in seen:
+            seen.add(name)
+            todo.extend(imported(name) - seen)
+    allowed = {f"{pkg}.__main__", f"{pkg}.plans.inspect"}
+    assert sorted(set(paths) - seen - allowed) == []

@@ -306,7 +306,9 @@ def test_opq_encode_matches_rotated_reference(emb, sample):
     R, cb = pq.train_opq(emb, m=4, n_codes=8, n_iters=3)
     got = {
         r["id"]: (list(r["codes"]), r["recon_err"])
-        for r in pq.opq_encode(emb, R, cb).collect()
+        for r in pq.pq_encode(
+            pq._rotated(emb, R, "vec_id", "embedding"), cb
+        ).collect()
     }
     Y = X @ R
     codes = pq._encode_block(Y, cb)
@@ -340,7 +342,7 @@ def test_opq_validation(emb, spark):
         [(1, [0.0, 1.0])], "vec_id long, embedding array<double>"
     )
     with pytest.raises(Exception, match="dim"):
-        pq.opq_encode(short, R, cb).collect()
+        pq.opq_topk(short, R, cb).collect()
 
 
 def test_ivfpq_coarse_equals_ivf_quantizer(spark):

@@ -447,60 +447,6 @@ def test_cms_python_twin_property(keys, width, depth):
 # ---- r10 additions: pure-python primitives (no Spark in the loop, so
 # examples are cheap and the strategies can be generous) --------------
 
-_td_vals = st.lists(
-    st.floats(-1e6, 1e6, allow_nan=False, allow_infinity=False),
-    min_size=1,
-    max_size=400,
-)
-
-
-@settings(max_examples=60, deadline=None, suppress_health_check=list(HealthCheck))
-@given(vals=_td_vals, delta=st.integers(10, 200))
-def test_tdigest_merge_invariants(vals, delta):
-    """_td_merge invariants for ANY input: weight conserved exactly
-    (integer unit weights), means sorted, every centroid mean inside
-    the data range, and quantiles monotone in q within [min, max]."""
-    import numpy as np
-
-    from tableone_pyspark_spark.operators.tdigest import (
-        _td_merge,
-        _td_quantile,
-    )
-
-    v = np.asarray(vals, dtype=np.float64)
-    m, w = _td_merge(v, np.ones_like(v), delta)
-    assert float(w.sum()) == float(len(v))
-    assert list(m) == sorted(m)
-    assert v.min() <= m[0] and m[-1] <= v.max()
-    qs = [0.0, 0.1, 0.5, 0.9, 1.0]
-    est = [_td_quantile(m, w, q) for q in qs]
-    assert est == sorted(est)  # monotone in q
-    assert v.min() <= est[0] and est[-1] <= v.max()
-
-
-@settings(max_examples=60, deadline=None, suppress_health_check=list(HealthCheck))
-@given(vals=_td_vals, delta=st.integers(10, 100), cut=st.integers(1, 399))
-def test_tdigest_merge_associativity_contract(vals, delta, cut):
-    """Merging two halves re-merges into a VALID digest with the same
-    total weight and data range as a direct build (bytes may differ —
-    the documented engine-specific class; the invariants may not)."""
-    import numpy as np
-
-    from tableone_pyspark_spark.operators.tdigest import _td_merge
-
-    v = np.asarray(vals, dtype=np.float64)
-    cut = min(cut, len(v))
-    m1, w1 = _td_merge(v[:cut], np.ones(cut), delta)
-    m2, w2 = _td_merge(v[cut:], np.ones(len(v) - cut), delta)
-    m, w = _td_merge(
-        np.concatenate([m1, m2]), np.concatenate([w1, w2]), delta
-    )
-    assert float(w.sum()) == float(len(v))
-    assert list(m) == sorted(m)
-    if len(v):
-        assert v.min() <= m[0] and m[-1] <= v.max()
-
-
 @settings(max_examples=80, deadline=None, suppress_health_check=list(HealthCheck))
 @given(t=st.text(max_size=200))
 def test_robust_key_idempotent(t):

@@ -5,14 +5,16 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from tableone_pyspark_spark.operators.sampling import (
-    deterministic_sample,
-    hash_split,
-)
+from tableone_pyspark_spark.operators.sampling import hash_split
 
 
 def _docs(spark):
     return spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+
+
+def _test_keys(df, fraction, salt="split-v1"):
+    out = hash_split(df, "doc_id", test_fraction=fraction, salt=salt)
+    return {r["doc_id"] for r in out.where(F.col("split") == "test").collect()}
 
 
 def test_split_partition_invariant(spark):
@@ -36,17 +38,16 @@ def test_split_fraction_and_disjointness(spark):
 
 def test_sample_is_subset_and_consistent_across_tables(spark):
     d = _docs(spark)
-    s1 = {r["doc_id"] for r in deterministic_sample(d, "doc_id", 0.3).collect()}
+    s1 = _test_keys(d, 0.3)
     # a second table sharing the key space picks the SAME keys
-    other = d.select("doc_id", "lang")
-    s2 = {r["doc_id"] for r in deterministic_sample(other, "doc_id", 0.3).collect()}
+    s2 = _test_keys(d.select("doc_id", "lang"), 0.3)
     assert s1 == s2 and 0 < len(s1) < d.count()
 
 
 def test_salt_decorrelates(spark):
     d = _docs(spark)
-    a = {r["doc_id"] for r in deterministic_sample(d, "doc_id", 0.5, salt="a").collect()}
-    b = {r["doc_id"] for r in deterministic_sample(d, "doc_id", 0.5, salt="b").collect()}
+    a = _test_keys(d, 0.5, salt="a")
+    b = _test_keys(d, 0.5, salt="b")
     assert a != b  # different salts draw different halves
 
 

@@ -1803,6 +1803,31 @@ def test_merge_rows_clauses_and_guards(spark, tmp_path):
     assert [x for x in got if x[0] is None] == [(None, 7), (None, 8)]
 
 
+def test_merge_rows_jobs_carry_the_callers_job_group(spark, tmp_path):
+    """The three concurrent merge writers (retraction vector, update
+    postimages, inserts) run in a pool; their jobs inherit the caller's
+    job group, so no job of a merge runs ungrouped."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    t = str(tmp_path / "m_group")
+    base = spark.range(10).select(
+        F.col("id").alias("k"), (F.col("id") * 10).alias("v")
+    )
+    tl.commit(spark, base.coalesce(2), t)
+    src = spark.createDataFrame([(3, 999), (42, 420)], "k long, v long")
+    before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("merge-job-group-test", "merge_rows call")
+    try:
+        rep = tl.merge_rows(spark, t, src, ["k"])
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert (rep["n_deleted"], rep["n_inserted"]) == (1, 2)
+    assert set(tracker.getJobIdsForGroup(None)) - before == set()
+    assert tracker.getJobIdsForGroup("merge-job-group-test")
+
+
 def test_merge_feeds_cdf_mv_and_streams(spark, tmp_path):
     """X144 composition: a merge version flows through (a) batch
     table_changes as exact D-preimage + I rows, (b) the X140 change

@@ -30,7 +30,6 @@ def test_counts_and_ratios(spark):
     r = df.select(
         tx.word_count(F.col("text")).alias("wc"),
         tx.token_count(F.col("text")).alias("tc"),
-        tx.char_count(F.col("text")).alias("cc"),
         tx.punct_ratio(F.col("text")).alias("pr"),
         tx.alpha_ratio(F.col("text")).alias("ar"),
     ).collect()[0]
@@ -38,7 +37,6 @@ def test_counts_and_ratios(spark):
     # Hello , world ! 4 2 times → letter runs: Hello, world, times;
     # digits: 4, 2; punct: , !
     assert r["tc"] == 7
-    assert r["cc"] == 22
     assert approx(r["pr"], 2 / 22)
     assert approx(r["ar"], 15 / 22)
 
@@ -73,12 +71,11 @@ def test_stopword_ratio(spark):
 
 
 def test_rolling_fingerprint(spark):
-    from tableone_pyspark_spark.functions.text import rolling_fingerprint
-
     df = spark.createDataFrame(
         [("abc",), ("abd",), ("  ABC \t",), ("",)], "t string"
     )
-    fps = [r[0] for r in df.select(rolling_fingerprint(F.col("t"))).collect()]
+    fp = tx.poly_hash(tx.normalize_text(F.col("t")))
+    fps = [r[0] for r in df.select(fp).collect()]
     # Horner over 'abc' = ((0*31+97)*31+98)*31+99 = 96354
     assert fps[0] == ((97 * 31 + 98) * 31 + 99) % ((1 << 31) - 1)
     assert fps[0] != fps[1]            # single-char change flips the hash
@@ -123,87 +120,26 @@ def test_repetition_profile_arrow_catalyst_parity(spark):
     assert fast[5]["top_bigram_frac"] is None
 
 
-def test_sentence_udtf_matches_catalyst_twin(spark):
-    from tableone_pyspark_spark.functions.text import (
-        make_sentence_udtf,
-        sentence_split_catalyst,
-    )
-
-    d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(50)
-    cat = {
-        (r["id"], r["sent_id"], r["sentence"])
-        for r in sentence_split_catalyst(d, "text", "doc_id").collect()
-    }
-    spark.udtf.register("sentence_split", make_sentence_udtf())
-    d.createOrReplaceTempView("t_sent_docs")
-    via_udtf = {
-        (r["id"], r["sent_id"], r["sentence"])
-        for r in spark.sql(
-            "SELECT doc_id AS id, s.sent_id, s.sentence "
-            "FROM t_sent_docs, LATERAL sentence_split(text) s"
-        ).collect()
-    }
-    assert len(cat) > 0
-    assert cat == via_udtf  # UDTF seam ≡ Catalyst default, row for row
-
-
-def test_compression_signals_match_zlib(spark):
-    import zlib
-
-    from tableone_pyspark_spark.functions.text import compression_signals
-
-    rows = [
-        (1, "aaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaa"),  # highly compressible
-        (2, "the quick brown fox jumps over the lazy dog"),
-        (3, None),
-        (4, ""),
-        (5, "héllo wörld \U0001F600" * 3),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = {
-        r["id"]: r
-        for r in compression_signals(df, "doc_id", "text").collect()
-    }
-    for i, t in rows:
-        raw = (t or "").encode("utf-8")
-        assert got[i]["n_bytes"] == len(raw)
-        if raw:
-            assert got[i]["n_compressed"] == len(zlib.compress(raw, 6))
-            import pytest as _pytest
-            assert got[i]["compression_ratio"] == _pytest.approx(
-                len(zlib.compress(raw, 6)) / len(raw)
-            )
-        else:
-            assert got[i]["n_compressed"] == 0
-            assert got[i]["compression_ratio"] is None
-    # the quality-proxy ordering the filter relies on
-    assert got[1]["compression_ratio"] < got[2]["compression_ratio"]
-    import pytest as _pytest
-    with _pytest.raises(ValueError, match="level"):
-        compression_signals(df, "doc_id", "text", level=11).collect()
-
-
 def test_rolling_fingerprint_is_bloom_h1(spark):
     """Pin the identity the r11 text_fingerprints deletion cites: the
-    fingerprint column IS the h1 intermediate bloom builds/probes
-    grade per document (poly_hash of the normalized text, base 31,
-    mod 2^31-1) — value-equal on the real corpus, so the deleted
-    query's evidence remains row-covered through bloom_probe."""
+    document fingerprint (poly_hash of the normalized text, base 31,
+    mod 2^31-1) IS the h1 intermediate bloom builds/probes grade per
+    document — the Catalyst fold and bloom's Arrow batch fold are
+    value-equal on the real corpus, so the deleted query's evidence
+    remains row-covered through bloom_probe."""
     from pyspark.sql import functions as F
 
-    from tableone_pyspark_spark.functions.text import (
-        normalize_text,
-        poly_hash,
-        rolling_fingerprint,
-    )
+    from tableone_pyspark_spark.functions.text import normalize_text, poly_hash
+    from tableone_pyspark_spark.operators.bloom import _horner_batch
 
     d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    norm = normalize_text(F.col("text"))
     rows = d.select(
-        rolling_fingerprint(F.col("text")).alias("fp"),
-        poly_hash(normalize_text(F.col("text")), 31).alias("h1"),
+        norm.alias("norm"), poly_hash(norm, 31).alias("fp")
     ).collect()
     assert len(rows) == 500
-    assert all(r["fp"] == r["h1"] for r in rows)
+    h1 = _horner_batch([r["norm"] for r in rows], 31)
+    assert [r["fp"] for r in rows] == h1.tolist()
 
 
 def test_c4_page_kernel_matches_catalyst_twin(spark):
